@@ -7,20 +7,20 @@ Run from the repository root, in one process with one client and a
 closed loop on ``local[<cores>]``. A run:
 
 1. generates the workload's inputs from ``--seed`` (outside all timing);
-2. sets up ``SETUPS`` times — start a Spark session, then one op on
-   fresh state — and reports the median as ``setup_s``;
-3. runs an untimed warm-up round, so caches and code generation are
-   done before anything is counted (skipped when a round is the one
-   op the set-ups already ran);
-4. runs whole rounds until ``--seconds`` have passed and reports the
-   end-to-end metrics;
-5. with ``--trace 1``, runs ``TRACE_ROUNDS`` more rounds with spans on
-   and reports the per-layer metrics instead, plus the spans as JSON
-   lines under ``.perfbench/``.
+2. sets up once, cold: starts the JVM and a Spark session and runs the
+   first op of round 0; that time is ``setup_s``;
+3. runs the rest of round 0 untimed, so caches and code generation are
+   done before anything is counted, then resets the peak-memory marks;
+4. with ``--trace 0``, runs whole rounds until ``--seconds`` have
+   passed and reports the end-to-end metrics;
+5. with ``--trace 1``, runs the workload's ``TRACE_ROUNDS`` rounds
+   instead, in which traced and untraced ops alternate, and reports the
+   per-layer metrics, plus the spans as JSON lines under ``.perfbench/``.
 
-Every op's output is checked; the last stdout line is one JSON object
-with ``correct``, ``attempted``, ``failed`` and ``metrics``. The exit
-code is 1 when any check failed and 2 when the engine is not there.
+Every op's output is checked, and so is the state a round leaves; the
+last stdout line is one JSON object with ``correct``, ``attempted``,
+``failed`` and ``metrics``. The exit code is 1 when any check failed and
+2 when the engine is not there.
 """
 
 from __future__ import annotations
@@ -32,14 +32,11 @@ import shlex
 import shutil
 import statistics
 import sys
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 ROOT = os.getcwd()
-SETUPS = 3
 DRIVER_MEMORY = "2g"
-TRACE_ROUNDS = {"survey_medallion": 2, "query_mix": 1, "stream_ingest": 1}
 
 END_TO_END = {
     "setup_s": "s", "op_p50_s": "s", "op_tail_s": "s", "ops_per_s": "1/s",
@@ -76,6 +73,12 @@ def per_layer_units() -> dict[str, str]:
     return units
 
 
+def is_traced(key: int, k: int) -> bool:
+    """Whether trace round ``k`` traces an op with key ``key``: see
+    ``Runner.trace_rounds``."""
+    return (key + k + k // 2) % 2 == 0
+
+
 def _isolate(work: str) -> None:
     """Point every scratch location of Spark, the JVM and Python at the
     run's own directory inside the checkout."""
@@ -85,9 +88,13 @@ def _isolate(work: str) -> None:
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
     os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
-    # a fixed heap: no heap resizing between runs to move GC time and
-    # RSS; no hsperfdata file under /tmp
-    java_opts = (f"-Xms{DRIVER_MEMORY} -XX:-UsePerfData "
+    # A fixed heap, touched in full at start: without -Xms G1 grows the
+    # heap by its GC-time heuristics, and without the pre-touch the
+    # share of the heap a run happens to touch decides the JVM's peak
+    # RSS; either moved it 20-25% between runs of the same work. So
+    # peak_rss_mb moves with memory outside the heap and in Python, not
+    # with heap use. No hsperfdata file under /tmp.
+    java_opts = (f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch -XX:-UsePerfData "
                  f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}")
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         f"--driver-java-options {shlex.quote(java_opts)} pyspark-shell")
@@ -101,7 +108,6 @@ class Runner:
         self.wl = WORKLOADS[workload]()
         self.seed, self.seconds, self.trace = seed, seconds, trace
         self.attempted = self.failed = 0
-        self._count = threading.Lock()  # warm-up ops may run on threads
         self.spark = None
 
     def _op(self, tracer, item, op_id: int) -> tuple[float, int]:
@@ -109,102 +115,141 @@ class Runner:
         with tracer.op(op_id):
             rows, ok = self.wl.op(self.spark, tracer, item)
         dt = time.perf_counter() - t0
-        with self._count:
-            self.attempted += 1
-            self.failed += not ok
-        if not ok:
-            print(f"# check failed: {self.wl.name} op {op_id} ({item})", flush=True)
+        self.attempted += 1
+        self._count(ok, f"op {op_id} ({item})")
         return dt, rows
 
-    def setup(self) -> tuple[list[float], list[float]]:
+    def _count(self, ok: bool, what: str) -> None:
+        self.failed += not ok
+        if not ok:
+            print(f"# check failed: {self.wl.name} {what}", flush=True)
+
+    def _check_round(self, rnd: int) -> None:
+        """The state a round left behind, checked outside all timing; a
+        failure counts against the round's last op."""
+        self._count(self.wl.check_round(self.spark), f"round {rnd}")
+
+    def setup(self) -> tuple[float, float]:
+        """The cold set-up: start the JVM and a Spark session, then run
+        the first op of round 0. Returns (set-up, session start) in
+        seconds."""
         from ffi_etl_spark.session import get_session
         from perfbench.trace import Tracer
 
-        setups, sessions = [], []
-        for k in range(SETUPS):
-            if self.spark is not None:
-                self.spark.stop()
-            self.wl.reset()
-            t0 = time.perf_counter()
-            self.spark = get_session(f"perfbench-{self.wl.name}")
-            sessions.append(time.perf_counter() - t0)
-            self._op(Tracer(self.spark.sparkContext, False), self.wl.setup_item, -1 - k)
-            setups.append(time.perf_counter() - t0)
-        return setups, sessions
+        t0 = time.perf_counter()
+        self.spark = get_session(f"perfbench-{self.wl.name}")
+        session = time.perf_counter() - t0
+        self._op(Tracer(self.spark.sparkContext, False), self.wl.setup_item, -1)
+        return time.perf_counter() - t0, session
 
     def warm_up(self, tracer) -> None:
-        """One untimed round, unless the set-ups already ran every op of
-        a round; concurrent when the workload asks for it."""
+        """The rest of round 0, untimed, on ``WARMUP_THREADS`` client
+        threads."""
         items = self.wl.schedule(self.seed, 0)
-        if items == [self.wl.setup_item]:
-            return
-        self.wl.reset()
-        threads = getattr(self.wl, "WARMUP_THREADS", 1)
-        with ThreadPoolExecutor(threads) as ex:
-            for f in [ex.submit(self._op, tracer, item, i) for i, item in enumerate(items)]:
-                f.result()
+        items.remove(self.wl.setup_item)
+        with ThreadPoolExecutor(self.wl.WARMUP_THREADS) as ex:
+            oks = list(ex.map(lambda item: self.wl.op(self.spark, tracer, item)[1], items))
+        for item, ok in zip(items, oks):
+            self.attempted += 1
+            self._count(ok, f"warm-up op ({item})")
+        self._check_round(0)
 
-    def rounds(self, tracer, first_round: int, n_rounds: int | None, seconds: float | None):
-        """Whole rounds, a fixed number or until ``seconds`` passed.
-        Returns (latencies, rows, elapsed, rounds)."""
-        lat, rows, rnd = [], 0, first_round
-        t0 = time.perf_counter()
+    def rounds(self, tracer, first_round: int, seconds: float):
+        """Whole rounds until their ops took ``seconds``. Returns
+        (latencies, rows, elapsed, rounds)."""
+        lat, rows, elapsed, rnd = [], 0, 0.0, first_round
         while True:
-            self.wl.reset()
+            t0 = time.perf_counter()
             for item in self.wl.schedule(self.seed, rnd):
                 dt, r = self._op(tracer, item, len(lat))
                 lat.append(dt)
                 rows += r
+            elapsed += time.perf_counter() - t0
+            self._check_round(rnd)
             rnd += 1
-            if tracer.enabled:
-                tracer.collect_counters()
-            elapsed = time.perf_counter() - t0
-            done = rnd - first_round
-            if (n_rounds is not None and done >= n_rounds) or (
-                    seconds is not None and elapsed >= seconds):
-                return lat, rows, elapsed, done
+            if elapsed >= seconds:
+                return lat, rows, elapsed, rnd - first_round
+
+    def trace_rounds(self, first_round: int):
+        """The workload's ``TRACE_ROUNDS`` rounds, in which traced and
+        untraced ops alternate: in round k an op is traced when its key
+        plus k + k // 2 is even. Over two rounds, a query (keyed by its
+        place in the list) runs traced once and untraced once; over four
+        one-op rounds (key 0) ops run traced, untraced, untraced,
+        traced, so warming and drift weigh on both sides alike. Returns
+        the tracer and ``trace.overhead_share``: the traced ops' total
+        latency over the untraced ops' total, minus 1 (on query_mix both
+        totals cover every query once; the medians of two such mixed
+        sets moved by up to 24% between runs of the same seed)."""
+        from perfbench.trace import Tracer
+
+        on = Tracer(self.spark.sparkContext, True)
+        off = Tracer(self.spark.sparkContext, False)
+        lat: dict[bool, list[float]] = {True: [], False: []}
+        for k in range(self.wl.TRACE_ROUNDS):
+            for item in self.wl.schedule(self.seed, first_round + k):
+                traced = is_traced(self.wl.key(item), k)
+                dt, _ = self._op(on if traced else off, item, len(lat[True]) + len(lat[False]))
+                lat[traced].append(dt)
+            on.collect_counters()
+            self._check_round(first_round + k)
+        return on, sum(lat[True]) / sum(lat[False]) - 1
 
     def run(self, work: str) -> dict:
         from perfbench import stats
         from perfbench.trace import Tracer
 
+        t0 = time.perf_counter()
         manifest = self.wl.prepare(work, self.seed)
         print(f"# {self.wl.name} seed={self.seed} inputs: {json.dumps(manifest)}", flush=True)
-        setups, sessions = self.setup()
+        phases = {"prepare": time.perf_counter() - t0}
+        setup_s, session_s = self.setup()
+        phases["setup"] = setup_s
         off = Tracer(self.spark.sparkContext, False)
+        t0 = time.perf_counter()
         self.warm_up(off)
-        self.spark.sparkContext._jvm.System.gc()  # warm-up garbage is not the timed ops' cost
-        lat, rows, elapsed, n_rounds = self.rounds(off, 1, None, self.seconds)
-        jvm_pid = self.spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+        phases["warm_up"] = time.perf_counter() - t0
+        print(f"# get_session_s = {session_s:.3f}", flush=True)
+        if self.trace:
+            t0 = time.perf_counter()
+            tracer, overhead = self.trace_rounds(1)
+            phases["trace"] = time.perf_counter() - t0
+            print("# phases_s: " + ", ".join(f"{k}={v:.1f}" for k, v in phases.items()))
+            out_dir = os.path.join(ROOT, ".perfbench")
+            os.makedirs(out_dir, exist_ok=True)
+            tracer.write(os.path.join(out_dir, f"spans-{self.wl.name}-seed{self.seed}.jsonl"))
+            layer = layer_metrics(tracer, self.wl, manifest)
+            layer["session.get_session_s"] = session_s
+            layer["trace.overhead_share"] = overhead
+            print(f"# trace.overhead_share = {overhead:.4f}")
+            units = per_layer_units()
+            return {k: {"value": layer.get(k, 0), "unit": u} for k, u in units.items()}
+
+        jvm = self.spark.sparkContext._jvm
+        jvm.System.gc()  # warm-up garbage is not the timed ops' cost
+        jvm_pid = jvm.java.lang.ProcessHandle.current().pid()
+        for pid in ("self", jvm_pid):  # the peak covers the timed rounds only
+            stats.reset_hwm(pid)
+        t0 = time.perf_counter()
+        lat, rows, elapsed, n_rounds = self.rounds(off, 1, self.seconds)
+        phases["timed"] = time.perf_counter() - t0
         pct, tail_v, n = stats.tail(lat)
+        rss = {"python": stats.vm_hwm_mb(), "jvm": stats.vm_hwm_mb(jvm_pid)}
         e2e = {
-            "setup_s": statistics.median(setups),
+            "setup_s": setup_s,
             "op_p50_s": statistics.median(lat),
             "op_tail_s": tail_v,
             "ops_per_s": len(lat) / elapsed,
             "rows_per_s": rows / elapsed,
-            "peak_rss_mb": stats.vm_hwm_mb() + stats.vm_hwm_mb(jvm_pid),
+            "peak_rss_mb": rss["python"] + rss["jvm"],
         }
-        print(f"# setups_s={[round(s, 3) for s in setups]} "
-              f"get_session_s={[round(s, 3) for s in sessions]}", flush=True)
+        print("# phases_s: " + ", ".join(f"{k}={v:.1f}" for k, v in phases.items()))
+        print("# peak_rss_mb by process: " + ", ".join(f"{k}={v:.1f}" for k, v in rss.items()))
         print(f"# timed: {len(lat)} ops in {n_rounds} rounds, {elapsed:.2f} s; "
-              f"tail = p{pct:g} of {n} samples; slowest "
-              f"{sorted(round(x, 3) for x in lat)[-3:]}", flush=True)
+              f"tail = p{pct:g} of {n} samples; latencies {[round(x, 3) for x in lat]}")
         for k, v in e2e.items():
-            print(f"# {k} = {v:.6g} {END_TO_END[k]}", flush=True)
-        if not self.trace:
-            return {k: {"value": v, "unit": END_TO_END[k]} for k, v in e2e.items()}
-
-        tracer = Tracer(self.spark.sparkContext, True)
-        tlat, _, _, _ = self.rounds(tracer, 1 + n_rounds, TRACE_ROUNDS[self.wl.name], None)
-        out_dir = os.path.join(ROOT, ".perfbench")
-        os.makedirs(out_dir, exist_ok=True)
-        tracer.write(os.path.join(out_dir, f"spans-{self.wl.name}-seed{self.seed}.jsonl"))
-        layer = layer_metrics(tracer, self.wl, manifest)
-        layer["session.get_session_s"] = statistics.median(sessions)
-        layer["trace.overhead_share"] = statistics.median(tlat) / e2e["op_p50_s"] - 1
-        units = per_layer_units()
-        return {k: {"value": layer.get(k, 0), "unit": u} for k, u in units.items()}
+            print(f"# {k} = {v:.6g} {END_TO_END[k]}")
+        return {k: {"value": v, "unit": END_TO_END[k]} for k, v in e2e.items()}
 
 
 def _inclusive(spans: list[dict], sp: dict, key: str):
@@ -264,12 +309,12 @@ def layer_metrics(tracer, wl, manifest: dict) -> dict:
         out[f"streaming.{sink}.batch_s"] = med(times)
         for c in ("jobs", "shuffle_bytes", "bytes_written"):
             out[f"streaming.{sink}.{c}"] = med([s[c] for s in ss])
-        state_bytes, state_files = wl.state_usage[sink]
+        state_bytes, state_files = wl.state_usage(sink)
         out[f"streaming.{sink}.state_bytes"] = state_bytes
         out[f"streaming.{sink}.state_files"] = state_files
-        # appends only (op 0 of each round bootstraps): late half over
-        # early half of the round
-        appends = [t for s, t in zip(ss, times) if s["op"] % wl.BATCHES]
+        # every batch appended after round 0, traced or not: the late
+        # half's median over the early half's
+        appends = wl.append_times[sink]
         half = len(appends) // 2
         out[f"streaming.{sink}.slope"] = med(appends[-half:]) / med(appends[:half])
     return out

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 import os
+import statistics
 
 TAIL_BEYOND = 10  # samples that must lie above a reported tail
 
@@ -23,15 +24,15 @@ def tail(samples: list[float], beyond: int = TAIL_BEYOND) -> tuple[float, float,
     """``(percentile, value, n)`` for the highest whole percentile that
     leaves at least ``beyond`` samples strictly above its nearest-rank
     value. With fewer than ``2 * beyond`` samples no percentile at or
-    above the median qualifies, and the tail is the median, reported as
-    percentile 50."""
+    above the median qualifies, and the tail is the median (the mean of
+    the middle two for an even count), reported as percentile 50."""
     n = len(samples)
     s = sorted(samples)
     for p in range(99, 49, -1):
         v = percentile(s, p)
         if sum(1 for x in s if x > v) >= beyond:
             return float(p), v, n
-    return 50.0, percentile(s, 50), n
+    return 50.0, statistics.median(s), n
 
 
 def self_time(start: float, end: float, children: list[tuple[float, float]]) -> float:
@@ -52,6 +53,12 @@ def self_time(start: float, end: float, children: list[tuple[float, float]]) -> 
     if cur_hi is not None:
         covered += cur_hi - cur_lo
     return (end - start) - covered
+
+
+def reset_hwm(pid: int | str = "self") -> None:
+    """Reset a process's ``VmHWM`` to its current resident set."""
+    with open(f"/proc/{pid}/clear_refs", "w") as f:
+        f.write("5")
 
 
 def vm_hwm_mb(pid: int | str = "self") -> float:

@@ -19,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 sys.path.insert(0, REPO)
 
 from perfbench import gen, stats  # noqa: E402
-from perfbench.run import END_TO_END, per_layer_units  # noqa: E402
+from perfbench.run import END_TO_END, is_traced, per_layer_units  # noqa: E402
 from perfbench.workloads import HEADLINE, WORKLOADS  # noqa: E402
 
 NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
@@ -71,8 +71,31 @@ def test_tail_leaves_ten_samples_beyond():
 
 def test_tail_with_too_few_samples_is_the_median():
     assert stats.tail([3.0, 1.0, 2.0]) == (50.0, 2.0, 3)
+    assert stats.tail([7.0, 5.0]) == (50.0, 6.0, 2)
+    assert stats.tail([4.0]) == (50.0, 4.0, 1)
     s = [float(i) for i in range(19)]
     assert stats.tail(s) == (50.0, stats.percentile(s, 50), 19)
+
+
+def test_trace_rounds_alternate_traced_and_untraced_ops():
+    # one-op rounds (key 0) over four rounds: traced, untraced, untraced, traced
+    assert [is_traced(0, k) for k in range(4)] == [True, False, False, True]
+    # over two rounds every query runs traced once and untraced once,
+    # and half of the queries run traced first
+    qm = WORKLOADS["query_mix"]()
+    assert qm.TRACE_ROUNDS == 2
+    firsts = []
+    for q in HEADLINE:
+        flags = [is_traced(qm.key(q), k) for k in range(qm.TRACE_ROUNDS)]
+        assert sorted(flags) == [False, True]
+        firsts.append(flags[0])
+    assert abs(2 * sum(firsts) - len(HEADLINE)) <= 1
+
+
+def test_stream_rounds_land_each_batch_once():
+    si = WORKLOADS["stream_ingest"]()
+    landed = [b for rnd in range(8) for b in si.schedule(0, rnd)]
+    assert landed == list(range(9)) and si.setup_item == 0
 
 
 def test_percentile_nearest_rank():

@@ -1,7 +1,8 @@
 """The three workloads. Each one generates its inputs from the seed
 (``prepare``), then runs ops: one pipeline run, one registry query, or
 one landed micro-batch. ``op`` returns ``(input rows, correct)`` and
-records its per-layer spans on the tracer it is given.
+records its per-layer spans on the tracer it is given; ``check_round``
+checks the state a round of ops left behind, outside all timing.
 
 Sizes are fixed here, not by options: every run of a workload does the
 same amount of work per op, so runs compare across commits.
@@ -32,7 +33,20 @@ HEADLINE = [
 STAGES = ["extract", "transform", "roll_up", "merge_census", "write_to_volume"]
 
 
-class SurveyMedallion:
+class Workload:
+    setup_item = None  # the op of round 0 that the cold set-up runs
+    WARMUP_THREADS = 1
+    TRACE_ROUNDS = 4  # of a traced run
+
+    def key(self, item) -> int:
+        """Which trace rounds trace ``item``: see ``Runner.trace_rounds``."""
+        return 0
+
+    def check_round(self, spark) -> bool:
+        return True
+
+
+class SurveyMedallion(Workload):
     """The paper's product: the five-stage medallion pipeline from the
     survey CSVs to the gold exports, into a fresh warehouse each op."""
 
@@ -47,13 +61,8 @@ class SurveyMedallion:
         self.bytes_written: list[int] = []
         return {"input_rows": self.inputs["input_rows"], "input_bytes": self.inputs["input_bytes"]}
 
-    setup_item = None
-
     def schedule(self, seed: int, rnd: int) -> list:
         return [None]
-
-    def reset(self) -> None:
-        pass
 
     def op(self, spark, tracer, item) -> tuple[int, bool]:
         from ffi_etl_spark.pipelines import survey
@@ -155,15 +164,17 @@ def _traced_exports(survey, tracer):
         survey.single_file_json, survey.single_file_csv = saved
 
 
-class QueryMix:
+class QueryMix(Workload):
     """Read-only analytics: the 21 headline registry queries, each
     forced with ``count()``, over seeded TPC-H-shaped tables; every pass
     runs all of them in a seed-shuffled order."""
 
     name = "query_mix"
-    # the first run of each query compiles its code; four client
-    # threads spread that one-off cost over the cores
-    WARMUP_THREADS = 4
+    # the first run of each query compiles its code: on 4 cores the
+    # warm-up pass took 34 s on one client thread, 18-22 s on four and
+    # 16 s on eight
+    WARMUP_THREADS = 8
+    TRACE_ROUNDS = 2
 
     def prepare(self, work: str, seed: int) -> dict:
         import duckdb
@@ -178,9 +189,10 @@ class QueryMix:
         con = duckdb.connect()
         try:
             for t in self.table_rows:
-                con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
+                con.sql(f"CREATE TABLE {t} AS SELECT * FROM read_parquet("
                         f"'{os.path.join(self.sf_dir, t + '.parquet')}')")
-            self.expect = {q: len(con.sql(oracles[q]).fetchall()) for q in HEADLINE}
+            self.expect = {q: con.sql(f"SELECT count(*) FROM ({oracles[q]})").fetchone()[0]
+                           for q in HEADLINE}
         finally:
             con.close()
         self.rows: dict[str, int] = {}
@@ -193,8 +205,8 @@ class QueryMix:
         random.Random(seed * 1000 + rnd).shuffle(order)
         return order
 
-    def reset(self) -> None:
-        pass
+    def key(self, name: str) -> int:
+        return HEADLINE.index(name)
 
     def op(self, spark, tracer, name: str) -> tuple[int, bool]:
         with tracer.span(f"query.{name}"):
@@ -212,81 +224,80 @@ class QueryMix:
         return sum(self.table_rows.get(t, 0) for t in tables)
 
 
-class StreamIngest:
-    """Incremental dedup + ANN: each op lands one document batch and one
-    vector batch, then drains both sinks with ``availableNow``. A round
-    replays the same batches into fresh state, so every round does the
-    same work; its first batch bootstraps the stores."""
+class StreamIngest(Workload):
+    """Incremental dedup + ANN into one growing store: each op lands one
+    document batch and one vector batch, then drains both sinks with
+    ``availableNow``. Round 0 lands batches 0 (the set-up op, which
+    bootstraps the stores) and 1; round r > 0 lands batch r + 1, so
+    later rounds probe a larger store."""
 
     name = "stream_ingest"
-    BATCHES, DOCS, VECS = 6, 120, 400
+    BATCHES, DOCS, VECS = 20, 120, 400
     IN_BATCH_DUPS, CROSS_BATCH_DUPS = 4, 4
     # pinned split: planted pairs sit at jaccard >= 0.9, where 8 bands
-    # of 3 rows find a pair with probability > 0.9999
-    LSH = {"num_perm": 24, "bands": 8, "fast": True}
-
-    def prepare(self, work: str, seed: int) -> dict:
-        self.work = work
-        self.data = gen.stream_batches(seed, self.BATCHES, self.DOCS, self.VECS,
-                                       self.IN_BATCH_DUPS, self.CROSS_BATCH_DUPS)
-        self.round = 0
-        self.state_usage: dict[str, tuple[int, int]] = {}
-        self.reset()
-        rows = sum(len(d) for d in self.data["docs"]) + sum(len(v) for v in self.data["vecs"])
-        return {"input_rows": rows, "input_bytes": None, "planted_pairs": len(self.data["pairs"])}
-
+    # of 3 rows find a pair with probability > 0.9999. Shingles are
+    # hashed with md5, the sink's default: with fast=True the xxhash64
+    # signatures agree far less often than the Jaccard says, and planted
+    # pairs are missed.
+    LSH = {"num_perm": 24, "bands": 8}
     setup_item = 0
 
-    def schedule(self, seed: int, rnd: int) -> list:
-        return list(range(self.BATCHES))
-
-    def reset(self) -> None:
-        """Fresh state for a new round."""
-        if self.round:
-            shutil.rmtree(self.root, ignore_errors=True)
-        self.round += 1
-        self.root = os.path.join(self.work, f"round{self.round}")
-        for d in ("docs_in", "vecs_in"):
+    def prepare(self, work: str, seed: int) -> dict:
+        """Writes every batch's two files aside; an op only moves them in."""
+        self.root = os.path.join(work, "stream")
+        for d in ("docs_in", "vecs_in", "staged"):
             os.makedirs(os.path.join(self.root, d))
-        self.landed_vecs = 0
+        self.data = gen.stream_batches(seed, self.BATCHES, self.DOCS, self.VECS,
+                                       self.IN_BATCH_DUPS, self.CROSS_BATCH_DUPS)
+        for b in range(self.BATCHES):
+            for kind in ("docs", "vecs"):
+                gen.write_jsonl(self._staged(kind, b), self.data[kind][b])
+        self.landed: list[int] = []
+        self.append_times: dict[str, list[float]] = {"dedup": [], "ann": []}
+        staged = dir_usage(os.path.join(self.root, "staged"))[0]
+        return {"input_rows": self.BATCHES * (self.DOCS + self.VECS), "input_bytes": staged,
+                "batches": self.BATCHES, "docs_per_batch": self.DOCS,
+                "vecs_per_batch": self.VECS, "planted_pairs": len(self.data["pairs"])}
+
+    def _staged(self, kind: str, b: int) -> str:
+        return os.path.join(self.root, "staged", f"{kind}-b{b}.json")
+
+    def schedule(self, seed: int, rnd: int) -> list:
+        if rnd + 1 >= self.BATCHES:
+            raise RuntimeError(f"{self.name} generates {self.BATCHES} batches; "
+                               "--seconds is too long for them")
+        return [0, 1] if rnd == 0 else [rnd + 1]
 
     def op(self, spark, tracer, b: int) -> tuple[int, bool]:
         from ffi_etl_spark.streaming.ann_ingest import stream_ann_ingest
         from ffi_etl_spark.streaming.ingest import stream_dedup_ingest
 
         r = self.root
-        docs, vecs = self.data["docs"][b], self.data["vecs"][b]
-        gen.write_jsonl(os.path.join(r, "docs_in", f"b{b}.json"), docs)
-        gen.write_jsonl(os.path.join(r, "vecs_in", f"b{b}.json"), vecs)
-        self.landed_vecs += len(vecs)
+        for kind in ("docs", "vecs"):  # a whole file lands at once
+            os.replace(self._staged(kind, b), os.path.join(r, f"{kind}_in", f"b{b}.json"))
+        self.landed.append(b)
         dedup = stream_dedup_ingest(
             spark.readStream.schema("doc_id long, text string").json(os.path.join(r, "docs_in")),
             os.path.join(r, "corpus"), os.path.join(r, "pairs"), os.path.join(r, "ckpt_dedup"),
             sigs_path=os.path.join(r, "sigs"), **self.LSH)
-        self._drain(tracer, "streaming.dedup", dedup)
+        self._drain(tracer, "dedup", dedup, b)
         ann = stream_ann_ingest(
             spark.readStream.schema("vec_id long, embedding array<float>").json(os.path.join(r, "vecs_in")),
             os.path.join(r, "index"), os.path.join(r, "ckpt_ann"))
-        self._drain(tracer, "streaming.ann", ann)
-        ok = True
-        if b == self.BATCHES - 1:
-            ok = self._check(spark)
-            if tracer.enabled:
-                for sink, dirs in (("dedup", ("corpus", "sigs", "pairs")), ("ann", ("index",))):
-                    usage = [dir_usage(os.path.join(r, d)) for d in dirs]
-                    self.state_usage[sink] = (sum(u[0] for u in usage), sum(u[1] for u in usage))
-        return len(docs) + len(vecs), ok
+        self._drain(tracer, "ann", ann, b)
+        return self.DOCS + self.VECS, True
 
-    @staticmethod
-    def _drain(tracer, name: str, writer) -> None:
+    def _drain(self, tracer, sink: str, writer, b: int) -> None:
         t0 = time.perf_counter()
         q = writer.trigger(availableNow=True).start()
         q.awaitTermination()  # raises when the query failed
-        if tracer.enabled:
-            tracer.add(name, t0, time.perf_counter(), group=str(q.runId))
+        t1 = time.perf_counter()
+        if b > 1:  # after round 0
+            self.append_times[sink].append(t1 - t0)
+        tracer.add(f"streaming.{sink}", t0, t1, group=str(q.runId))
 
-    def _check(self, spark) -> bool:
-        """After a round's last batch: each planted pair appears in the
+    def check_round(self, spark) -> bool:
+        """Each planted pair whose documents have landed appears in the
         pairs audit exactly once, and the IVF assignments hold one row
         per vector landed."""
         r = self.root
@@ -295,10 +306,17 @@ class StreamIngest:
         counts: dict[tuple, int] = {}
         for p in audit:
             counts[p] = counts.get(p, 0) + 1
-        if any(counts.get(tuple(sorted(p)), 0) != 1 for p in self.data["pairs"]):
+        landed = {row["doc_id"] for b in self.landed for row in self.data["docs"][b]}
+        if any(counts.get(tuple(sorted(p)), 0) != 1 for p in self.data["pairs"] if p[1] in landed):
             return False
         assigned = spark.read.parquet(os.path.join(r, "index", "assignments")).count()
-        return assigned == self.landed_vecs
+        return assigned == sum(len(self.data["vecs"][b]) for b in self.landed)
+
+    def state_usage(self, sink: str) -> tuple[int, int]:
+        """(bytes, files) of a sink's stored state."""
+        dirs = {"dedup": ("corpus", "sigs", "pairs"), "ann": ("index",)}[sink]
+        usage = [dir_usage(os.path.join(self.root, d)) for d in dirs]
+        return sum(u[0] for u in usage), sum(u[1] for u in usage)
 
 
 WORKLOADS = {w.name: w for w in (SurveyMedallion, QueryMix, StreamIngest)}
