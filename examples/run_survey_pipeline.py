@@ -8,7 +8,10 @@ same run on this engine:
     python examples/run_survey_pipeline.py \
         --online online.csv --offline offline.csv --census census.csv \
         --renames renames.csv --deletes deletes.csv --open-text open_text.csv \
-        --warehouse ./warehouse --out ./gold_exports
+        --warehouse ./warehouse
+
+The gold tables land as one JSON file + one header CSV each under
+``{warehouse}/volume``.
 
 With no arguments it generates a tiny demo input set and runs on that,
 so the script doubles as a smoke example:
@@ -101,13 +104,11 @@ def main() -> None:
     ap.add_argument("--online"); ap.add_argument("--offline"); ap.add_argument("--census")
     ap.add_argument("--renames"); ap.add_argument("--deletes"); ap.add_argument("--open-text")
     ap.add_argument("--warehouse", default="./warehouse")
-    ap.add_argument("--out", default="./gold_exports")
     args = ap.parse_args()
 
     from ffi_etl_spark.pipelines.survey import build_survey_pipeline
     from ffi_etl_spark.session import get_session
     from ffi_etl_spark.sources.readers import config_list, config_map, read_csv
-    from ffi_etl_spark.sources.writers import export_gold_tables
     from ffi_etl_spark.catalog import DEFAULT_SF_DIR  # noqa: F401 (engine confs)
 
     spark = get_session("survey-pipeline")
@@ -140,11 +141,10 @@ def main() -> None:
             )),
         },
     )
-    exported = export_gold_tables(spark, args.out, pattern="roll_up")
     for name in ("survey_bronze", "survey_silver", "valid_survey", "invalid_survey",
                  "roll_up", "census_merged_roll_up"):
         print(f"{name}: {tables[name].count()} rows")
-    print(f"exported {exported} -> {args.out}")
+    print(f"gold exports -> {os.path.join(args.warehouse, 'volume')}")
     tables["census_merged_roll_up"].show(truncate=False)
 
 

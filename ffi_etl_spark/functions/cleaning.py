@@ -30,8 +30,13 @@ NULL_PHRASES = [
 
 def fix_mojibake(c: Column | str) -> Column:
     """Repair the two known mojibake sequences (utils.py:146-152,
-    transform_alchemer_data.py:20-23): ``â€™`` -> ``'`` and ``Ã`` -> ``i``."""
-    return F.regexp_replace(F.regexp_replace(F.col(c) if isinstance(c, str) else c, "â€™", "'"), "Ã", "i")
+    transform_alchemer_data.py:20-23): ``â€™`` -> ``'`` and ``Ã`` -> ``i``.
+
+    Literal ``replace``, not ``regexp_replace``: applied to every string
+    column, the regex form's generated code overflowed whole-stage
+    codegen's 64 KB method limit on the survey silver projection."""
+    col = F.col(c) if isinstance(c, str) else c
+    return F.replace(F.replace(col, F.lit("â€™"), F.lit("'")), F.lit("Ã"), F.lit("i"))
 
 
 def fix_mojibake_name(name: str) -> str:

@@ -22,9 +22,11 @@ roll-up, then:
   * stable display ordering via row_number partitioned by Demographic
     ordered by ``Display Order`` nulls-last then Category (:144-153).
 
-Scale note: the census side is tiny (hundreds of rows) -> broadcast
-join; the rollup side is already K rows post-aggregation. The max-date
-aggregate reduces map-side before its 1-row shuffle.
+Scale note: both join sides are small — the census has hundreds of
+rows and the rollup is already K rows post-aggregation — but a full
+outer join cannot broadcast either side, so it is a shuffle join over
+a few hundred rows. The max-date aggregate reduces map-side before its
+1-row shuffle.
 
 Deviation from the reference (documented): percent parsing casts to
 double, not float (merge_census.py:79-80) — float32 formatting is JVM-
@@ -67,7 +69,7 @@ def merge_census(
     rollup = rollup.withColumnsRenamed(
         {"Demographic": "Rollup_Demographic", "Category": "Rollup_Category"}
     )
-    joined = F.broadcast(census).join(
+    joined = census.join(
         rollup,
         [
             census["Census_Demographic"] == rollup["Rollup_Demographic"],
@@ -115,29 +117,9 @@ def merge_census(
             "Census_Category": F.coalesce("Census_Category", "Rollup_Category"),
         }
     )
-    # merge_census.py:60-68 — by this point census_only rows already had
-    # counts zero-filled; this narrower condition re-zero-fills and writes
-    # the "0 %" string variant when census data exists. The condition can
-    # only still hold for rows where the earlier fill happened, so only
-    # "% of Survey Responses" visibly changes ("0" -> "0 %").
-    census_backed = (
-        F.col("Census_Demographic").isNotNull()
-        & F.col("Census_Category").isNotNull()
-        & F.col("Census %").isNotNull()
-        & F.col("Rollup_Demographic").isNull()
-        & F.col("Rollup_Category").isNull()
-    )
-    joined = joined.withColumn(
-        "# of Survey Responses",
-        F.when(census_backed, 0).otherwise(F.col("# of Survey Responses")),
-    ).withColumn(
-        "% of Survey Responses",
-        F.when(census_backed, "0 %").otherwise(F.col("% of Survey Responses")),
-    )
-    # NOTE: census_backed references Rollup_* AFTER they were coalesced
-    # above, so it is false for every row — faithfully mirroring the
-    # reference, where the same dead condition appears (merge_census.py:60-68
-    # runs after :38-39's fill). Kept for strict behavior parity.
+    # merge_census.py:60-68 re-zero-fills rows with census data and no
+    # rollup side, writing "0 %". It tests Rollup_* after :38-39 filled
+    # them from Census_*, so it matches no row and is not reproduced.
 
     # merge_census.py:73-80
     joined = (

@@ -17,14 +17,13 @@ from rollup_alchemer_data.py:30-41):
 
 The reference computes the denominators with two eager ``collect()``
 calls per demographic (utils.py:207,211 — 12 driver round-trips per
-run). Here both are window aggregates over an empty partition spec, so
-the whole roll-up (all demographics) is ONE lazy plan: Catalyst fuses
-the scan, the per-demographic hash-aggregations share one shuffle
-boundary each, and nothing touches the driver. At 100 TB the group-by
-keys are low-cardinality demographic labels, so the partial (map-side)
+run). Here the denominator is a window aggregate partitioned by
+demographic, so the whole roll-up (all demographics) is ONE lazy plan
+and nothing touches the driver. At 100 TB the group-by keys are
+low-cardinality demographic labels, so the partial (map-side)
 aggregation reduces each partition to a handful of rows before the
-shuffle — the empty-partition window then runs over K rows (K =
-category count), which is trivially cheap.
+shuffle — the window then runs over K rows (K = category count), which
+is trivially cheap.
 """
 
 from __future__ import annotations
@@ -43,123 +42,74 @@ FINAL_COLUMNS = [
 ]
 
 
-def demographic_rollup(
-    df: DataFrame,
-    demographic_col: str,
-    demographic_name: str,
-    unknown_label: str = "Unknown",
-    total_via: str = "window",
-) -> DataFrame:
-    """Roll up one demographic column; collect-free port of utils.py:190-223.
+def _rollup(df: DataFrame, demographics: list[tuple[str, str]]) -> DataFrame:
+    """Count / percent / blank-total projection (utils.py:190-223) for
+    every ``(column, name)`` in ``demographics``, in ONE scan: an
+    explode to (Demographic, Category) pairs, ONE (Demographic,
+    Category) aggregate (map-side combined to K rows) and ONE
+    Demographic-partitioned window for the excl-Unknown denominator.
 
-    ``total_via`` picks how the excl-Unknown denominator enters the plan:
-      * ``"window"`` (default): empty-partition window over the K
-        post-aggregation rows — cheapest when K (category count) is
-        small, which holds for every reference demographic;
-      * ``"broadcast"``: a 1-row aggregate cross-joined in — same
-        semantics, no single-partition window, the safe choice when the
-        grouping key is high-cardinality (e.g. rolling up by zip or
-        doc shard at 100 TB)."""
-    grouped = df.groupBy(F.col(demographic_col).alias("Category")).agg(
-        F.count(F.lit(1)).alias("# of Survey Responses")
+    The columns must share one dtype: the explode array would coerce
+    them to a common type, which changes ``Category != 'Unknown'`` for
+    non-string categories."""
+    pairs = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(name).alias("Demographic"), F.col(col).alias("Category"))
+                for col, name in demographics
+            ]
+        )
+    ).alias("_dc")
+    grouped = (
+        df.select(pairs)
+        .select("_dc.Demographic", "_dc.Category")
+        .groupBy("Demographic", "Category")
+        .agg(F.count(F.lit(1)).alias("# of Survey Responses"))
     )
     cnt = F.col("# of Survey Responses")
-    if total_via == "broadcast":
-        total_df = grouped.agg(
-            F.sum(F.when(F.col("Category") != unknown_label, cnt)).alias("__total")
-        )
-        grouped = grouped.crossJoin(F.broadcast(total_df))
-        total_excl_unknown = F.col("__total")
-    else:
-        everything = Window.partitionBy()  # single global "partition" of K category rows
-        total_excl_unknown = F.sum(
-            F.when(F.col("Category") != unknown_label, cnt)
-        ).over(everything)
+    known = F.col("Category") != "Unknown"
+    total_excl_unknown = F.sum(F.when(known, cnt)).over(Window.partitionBy("Demographic"))
     return grouped.select(
-        F.lit(demographic_name).alias("Demographic"),
+        F.col("Demographic"),
         F.col("Category"),
         cnt,
         F.format_string("%.2f%%", cnt / total_excl_unknown * 100).alias(
             "% of Survey Responses"
         ),
-        F.when(
-            F.col("Category") != unknown_label,
-            total_excl_unknown.cast("string"),
-        )
+        F.when(known, total_excl_unknown.cast("string"))
         .otherwise(F.lit(""))
         .alias("Total Responses"),
-    ).orderBy(F.col("Category").desc())  # reference presentation order
-    # (rollup_alchemer_data.py) — kept here where it costs one K-row
-    # sort; the fused multi-demographic path below drops it (guide §2.4:
-    # an orderBy used only for presentation), since row order is not
-    # part of any gate and merge_census/the sinks are order-robust.
+    )
+
+
+def demographic_rollup(df: DataFrame, demographic_col: str, demographic_name: str) -> DataFrame:
+    """Roll up one demographic column; collect-free port of
+    utils.py:190-223, in the reference's presentation order
+    (rollup_alchemer_data.py) — the sort costs one K-row pass."""
+    return _rollup(df, [(demographic_col, demographic_name)]).orderBy(
+        F.col("Category").desc()
+    )
 
 
 def rollup_all(df: DataFrame, demographics: list[tuple[str, str]]) -> DataFrame:
     """Union of per-demographic roll-ups (rollup_alchemer_data.py:87-98).
 
-    Fused single-pass form (optimization round 12, guide §1.2): the
-    reference's shape — one scan + one hash aggregate + one
-    single-partition window PER demographic, then a union — re-reads
-    the input once per demographic and plans ~3 Exchanges each. All
-    demographics here are label columns of the SAME rows, so one
-    explode to (Demographic, Category) pairs computes every roll-up in
-    ONE scan, ONE (Demographic, Category) aggregate (map-side combined
-    to K rows) and ONE Demographic-partitioned window — no
-    single-partition window at all, and the pass count no longer grows
-    with the demographic list (3 scans → 1 at the gate; N → 1 at
-    100 TB). Values are bit-identical to the per-frame union: the same
-    counts reach the same `cnt / total * 100` float expression and the
-    same format/blank rules.
-
-    Falls back to the per-frame union when demographic columns have
-    heterogeneous dtypes (the explode array would coerce categories the
-    way unionByName does, but per-frame keeps each coercion explicit).
+    When every demographic column has one dtype, all of them roll up in
+    one pass (``_rollup``), so the pass count does not grow with the
+    demographic list. Otherwise each column rolls up on its own and the
+    frames are unioned, keeping each column's own comparison with
+    ``'Unknown'``: for a bigint column it is null, so that column gets
+    blank totals and no denominator. No presentation sort: row order is
+    not part of any gate, and merge_census and the sinks are
+    order-robust.
 
     The reference uses positional ``union``; all frames here share one
     builder so ``unionByName`` is both safe and order-robust.
     """
     dtypes = dict(df.dtypes)
-    if len(demographics) > 1 and len({dtypes[c] for c, _ in demographics}) == 1:
-        pairs = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(name).alias("Demographic"),
-                        F.col(col).alias("Category"),
-                    )
-                    for col, name in demographics
-                ]
-            )
-        ).alias("_dc")
-        grouped = (
-            df.select(pairs)
-            .select("_dc.Demographic", "_dc.Category")
-            .groupBy("Demographic", "Category")
-            .agg(F.count(F.lit(1)).alias("# of Survey Responses"))
-        )
-        cnt = F.col("# of Survey Responses")
-        per_demo = Window.partitionBy("Demographic")
-        total_excl_unknown = F.sum(
-            F.when(F.col("Category") != "Unknown", cnt)
-        ).over(per_demo)
-        return grouped.select(
-            F.col("Demographic"),
-            F.col("Category"),
-            cnt,
-            F.format_string("%.2f%%", cnt / total_excl_unknown * 100).alias(
-                "% of Survey Responses"
-            ),
-            F.when(
-                F.col("Category") != "Unknown",
-                total_excl_unknown.cast("string"),
-            )
-            .otherwise(F.lit(""))
-            .alias("Total Responses"),
-        ).select(FINAL_COLUMNS)
-    frames = [demographic_rollup(df, col, name) for col, name in demographics]
-    unioned = reduce(DataFrame.unionByName, frames)
-    return unioned.select(FINAL_COLUMNS)
+    if len({dtypes[c] for c, _ in demographics}) == 1:
+        return _rollup(df, demographics)
+    return reduce(DataFrame.unionByName, [_rollup(df, [d]) for d in demographics])
 
 
 def salted_agg(

@@ -9,8 +9,10 @@ is a real storage boundary (same recovery/incrementality semantics as
 the reference's workflow DAG).
 
 Each stage is ONE lazy plan ending in its write — the reference's
-mid-stage ``collect()`` scalars are gone (SURVEY.md §4), so a stage
-triggers exactly one job per output table.
+mid-stage ``collect()`` scalars are gone (SURVEY.md §4). A stage runs
+one write job per output table, plus the jobs AQE submits for the
+shuffle stages of that write's plan; reading a table back runs no job,
+because the read takes the schema of the frame just written.
 """
 
 from __future__ import annotations
@@ -64,9 +66,11 @@ class Pipeline:
     def run(self, spark: SparkSession, inputs: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
         """Run all stages; returns the accumulated table namespace.
 
-        Materialized outputs are written to ``{warehouse}/{table}`` and
-        re-read, so downstream stages consume the storage layer (scan
-        pushdown applies) rather than a giant fused in-memory plan.
+        Materialized outputs are written once to ``{warehouse}/{table}``
+        and read back once, so downstream stages consume the storage
+        layer (scan pushdown applies) rather than a giant fused in-memory
+        plan. The read-back passes the written frame's schema, so no
+        job reads parquet footers to infer it.
         """
         tables: dict[str, DataFrame] = dict(inputs or {})
         for st in self.stages:
@@ -84,9 +88,9 @@ class Pipeline:
                             )
                     df = df.observe(obs, *aggs)
                     path = os.path.join(self.warehouse, tname)
-                    write_table(df, path, name=tname)
+                    write_table(df, path)
                     self.metrics[tname] = obs.get
-                    tables[tname] = spark.read.parquet(path)
+                    tables[tname] = spark.read.schema(df.schema).parquet(path)
                 else:
                     tables[tname] = df
         return tables

@@ -9,9 +9,13 @@ parallelism sized to the actual core count rather than the 200 default.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger(__name__)
 
 # Confs applied to every engine session. At cluster scale these are the
 # same knobs; only master/memory change.
@@ -75,10 +79,16 @@ BLOOM_JOIN_CONFS: dict[str, str] = {
 
 
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply engine confs to an externally-created session (driver harness)."""
+    """Apply engine confs to an externally-created session (driver harness).
+
+    A conf that is fixed once the session has started (e.g.
+    ``spark.ui.enabled``) is skipped and logged; any other failure to
+    set a conf raises."""
     for k, v in ENGINE_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static confs (e.g. spark.driver.memory) can't change post-start
+        except AnalysisException as e:
+            if e.getCondition() != "CANNOT_MODIFY_CONFIG":
+                raise
+            logger.info("configure: %s is fixed after session start; skipped", k)
     return spark

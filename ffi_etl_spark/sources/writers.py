@@ -1,17 +1,17 @@
-"""Sinks (SURVEY.md §2.1 S6-S10).
+"""Sinks (SURVEY.md §2.1 S7-S9).
 
 The reference's Delta ``saveAsTable(overwrite, overwriteSchema,
-column-mapping-by-name)`` (utils.py:124-142) maps to parquet overwrite +
-temp-view registration: same addressability (``spark.table``/SQL), same
-full-replace semantics, and parquet field-ids tolerate the reference's
-space/``%``-laden column names. Single-file exports reproduce
-utils.py:226-252's coalesce(1)-then-rename dance with ``shutil`` in
-place of ``dbutils.fs``.
+column-mapping-by-name)`` (utils.py:124-142) maps to a parquet
+overwrite under the warehouse dir: same full-replace semantics, and
+parquet field-ids tolerate the reference's space/``%``-laden column
+names. ``Pipeline.run`` reads each table back by path. Single-file
+exports reproduce utils.py:226-252's coalesce(1)-then-rename dance
+with ``shutil`` in place of ``dbutils.fs``.
 
 Error policy (SURVEY.md §2.11): the reference *prints* writer
-exceptions (utils.py:140-142). Here that is an explicit switch —
-``strict=True`` raises (default; fail-fast core), ``strict=False``
-reproduces the reference's print-and-continue for drop-in parity.
+exceptions and continues (utils.py:140-142). Here every writer raises:
+a pipeline run that lost a layer table or an export fails instead of
+reporting success.
 
 Scale: table writes stay distributed (one file per partition);
 ``coalesce(1)`` is reserved for the final gold exports, which are
@@ -30,40 +30,15 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_table(
-    df: DataFrame,
-    path: str,
-    name: str | None = None,
-    mode: str = "overwrite",
-    strict: bool = True,
-    partition_by: list[str] | None = None,
-) -> None:
-    """S7: overwrite-save as a parquet-backed 'managed table'; register
-    a temp view when ``name`` is given so ``spark.table(name)`` works."""
-    try:
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-    except Exception as e:  # noqa: BLE001 — reference parity switch
-        if strict:
-            raise
-        print(f"Error writing data to {path}: {e}")
-        return
-    if name is not None:
-        df.sparkSession.read.parquet(path).createOrReplaceTempView(name)
+def write_table(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    """S7: overwrite-save as a parquet-backed 'managed table'."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
 
 
-def list_tables(spark: SparkSession, pattern: str | None = None) -> list[str]:
-    """S6: catalog introspection (write_to_volume.py:7-8's SHOW TABLES +
-    substring filter)."""
-    names = [t.name for t in spark.catalog.listTables()]
-    if pattern is not None:
-        names = [n for n in names if pattern in n]
-    return names
-
-
-def _single_file_export(df: DataFrame, fmt: str, final_path: str, strict: bool, **options) -> None:
+def _single_file_export(df: DataFrame, fmt: str, final_path: str, **options) -> None:
     """coalesce(1) -> temp dir -> locate part file -> move to final path
     (utils.py:226-252 with shutil instead of dbutils.fs)."""
     tmp = final_path + ".__tmp__"
@@ -79,37 +54,19 @@ def _single_file_export(df: DataFrame, fmt: str, final_path: str, strict: bool, 
         if os.path.exists(final_path):
             os.remove(final_path)
         shutil.move(part[0], final_path)
-    except Exception as e:  # noqa: BLE001 — reference parity switch
-        if strict:
-            raise
-        print(f"Error exporting {fmt} to {final_path}: {e}")
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def single_file_json(df: DataFrame, final_path: str, strict: bool = True) -> None:
+def single_file_json(df: DataFrame, final_path: str) -> None:
     """S8: one-file JSON-lines export (utils.py:245-252)."""
-    _single_file_export(df, "json", final_path, strict)
+    _single_file_export(df, "json", final_path)
 
 
-def single_file_csv(df: DataFrame, final_path: str, strict: bool = True) -> None:
+def single_file_csv(df: DataFrame, final_path: str) -> None:
     """S9: one-file header CSV export (write_to_volume.py:15-16, minus
     the driver-pandas round-trip)."""
-    _single_file_export(df, "csv", final_path, strict, header=True)
-
-
-def export_gold_tables(
-    spark: SparkSession, out_dir: str, pattern: str | None = None, strict: bool = True
-) -> list[str]:
-    """S8+S9 orchestration (write_to_volume.py:7-16): every registered
-    table matching ``pattern`` lands as one JSON file + one header CSV
-    under ``out_dir``. Returns the exported table names."""
-    names = list_tables(spark, pattern)
-    for name in names:
-        df = spark.table(name)
-        single_file_json(df, os.path.join(out_dir, f"{name}.json"), strict=strict)
-        single_file_csv(df, os.path.join(out_dir, f"{name}.csv"), strict=strict)
-    return names
+    _single_file_export(df, "csv", final_path, header=True)
 
 
 def compact_parquet(

@@ -10,6 +10,24 @@ def test_entry_returns_rows(spark):
     assert df.columns[0] == "Demographic"
 
 
+def test_configure_skips_only_confs_fixed_at_start(spark, monkeypatch, caplog):
+    """``configure`` on a running session skips (and logs) the confs
+    that cannot change after start, and raises on any other failure."""
+    import logging
+
+    import pytest
+    from pyspark.errors import IllegalArgumentException
+
+    from ffi_etl_spark import session
+
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        assert session.configure(spark) is spark
+    assert "spark.ui.enabled" in caplog.text
+    monkeypatch.setitem(session.ENGINE_CONFS, "spark.sql.shuffle.partitions", "not-a-number")
+    with pytest.raises(IllegalArgumentException):
+        session.configure(spark)
+
+
 def test_registry_consistency(spark):
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

@@ -244,17 +244,6 @@ def test_config_sheet_adapters(spark, tmp_path):
     assert config_list(cfg, "open_text_columns") == ["q1", "q2"]
 
 
-def test_export_gold_tables(gold, spark, tmp_path):
-    import os
-
-    from ffi_etl_spark.sources.writers import export_gold_tables
-
-    names = export_gold_tables(spark, str(tmp_path), pattern="roll_up")
-    assert "roll_up" in names
-    assert os.path.isfile(tmp_path / "roll_up.json")
-    assert os.path.isfile(tmp_path / "roll_up.csv")
-
-
 def test_pipeline_observe_metrics_ride_the_write(spark, tmp_path):
     """Run-ledger metrics (row counts + watched null counts) come from
     DataFrame.observe on the write job — values must match ground truth
@@ -276,3 +265,53 @@ def test_pipeline_observe_metrics_ride_the_write(spark, tmp_path):
     assert tables["out"].count() == 100
     assert pipe.metrics["out"]["n_rows"] == 100
     assert pipe.metrics["out"]["nulls:v"] == 10
+
+
+def test_pipeline_stage_runs_one_job_per_table(spark, tmp_path):
+    """A stage with no shuffle runs exactly one job per output table:
+    the write. Reading a table back takes the written frame's schema,
+    so no job reads parquet footers."""
+    from ffi_etl_spark.pipeline import Pipeline
+
+    pipe = Pipeline(str(tmp_path / "wh"))
+
+    @pipe.stage("s1")
+    def _s1(spark_, t):
+        return {"a": spark_.range(100), "b": spark_.range(10).selectExpr("id * 2 AS v")}
+
+    sc = spark.sparkContext
+    group = f"one-job-per-table-{tmp_path.name}"
+    sc.setJobGroup(group, "pipeline stage job count")
+    try:
+        tables = pipe.run(spark, {})
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert tables["a"].count() == 100
+    assert sorted(r.v for r in tables["b"].collect()) == list(range(0, 20, 2))
+
+
+def test_transform_silver_compiles_within_codegen_limit(spark, tmp_path):
+    """The silver projection over a 42-column bronze frame fits whole-
+    stage codegen's 64 KB method limit: with the interpreted fallback
+    switched off, an overflow would raise instead of being logged."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from ffi_etl_spark.pipelines.survey import transform_silver
+
+    row = _response("1")
+    row.update({f"Extra question {i}": "x" for i in range(42 - len(row))})
+    schema = StructType([StructField(k, StringType()) for k in row])
+    # a parquet scan, not a local relation: Catalyst folds a projection
+    # over local rows on the driver, where no code is generated
+    spark.createDataFrame([tuple(row.values())], schema).write.parquet(str(tmp_path / "bronze"))
+    bronze = spark.read.parquet(str(tmp_path / "bronze"))
+    assert len(bronze.columns) == 42
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        silver = transform_silver(bronze, ["Anything else you want to tell us?"], ["SessionID"])
+        silver.write.parquet(str(tmp_path / "silver"))
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    assert spark.read.parquet(str(tmp_path / "silver")).count() == 1

@@ -19,7 +19,7 @@ SNAPSHOT = [
     # (query, what the plan should show)
     ("tpch_q1", "pushed shipdate filter + pruned ReadSchema, one partial+final agg"),
     ("tpch_q3_top10", "broadcast dims, TakeOrderedAndProject top-k"),
-    ("census_merge", "broadcast census + broadcast 1-row max-date, K-row windows"),
+    ("census_merge", "shuffled full outer join of two small sides + broadcast 1-row max-date, K-row windows"),
     ("dedup_minhash", "signature persist, band self-join as the only wide shuffle, broadcast verify"),
     ("ann_ivf_topk", "packed 1-row broadcast centroid model, equi-join on centroid_id"),
     ("sessionize", "single user-keyed shuffle feeding lag + running-sum windows"),
