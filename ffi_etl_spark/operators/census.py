@@ -26,7 +26,15 @@ Scale note: both join sides are small — the census has hundreds of
 rows and the rollup is already K rows post-aggregation — but a full
 outer join cannot broadcast either side, so it is a shuffle join over
 a few hundred rows. The max-date aggregate reduces map-side before its
-1-row shuffle.
+1-row shuffle. A full outer sort-merge join reports an unknown output
+partitioning, so each of the two windows and the final ``orderBy``
+would shuffle again; instead the joined frame moves to one partition
+right after the max-date cross join, where both windows and the sort
+run with no exchange (9 → 6 jobs per write). That one partition is
+bounded: the frame holds at most census rows + roll-up rows, i.e. the
+number of (Demographic, Category) keys, whatever the survey's size.
+(Repartitioning the two join inputs instead does not help: the join
+output still reports an unknown partitioning.)
 
 Deviation from the reference (documented): percent parsing casts to
 double, not float (merge_census.py:79-80) — float32 formatting is JVM-
@@ -80,7 +88,9 @@ def merge_census(
     # Collect-free replacement for merge_census.py:129-131's driver
     # scalar: broadcast 1-row max aggregate cross-joined into the plan.
     max_df = stamped_from.agg(F.max(date_col).alias("__max_date"))
-    joined = joined.crossJoin(F.broadcast(max_df))
+    # One partition from here on (see the scale note): both windows and
+    # the final sort then need no exchange of their own.
+    joined = joined.crossJoin(F.broadcast(max_df)).repartition(1)
     max_date = F.col("__max_date")
 
     census_only = F.col("Rollup_Demographic").isNull() & F.col("Rollup_Category").isNull()

@@ -15,6 +15,7 @@ Stage semantics cite the reference notebook lines they reproduce.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +36,7 @@ from ffi_etl_spark.operators.census import merge_census
 from ffi_etl_spark.operators.extract import merge_online_offline, prefix_key
 from ffi_etl_spark.operators.rollup import rollup_all
 from ffi_etl_spark.operators.validity import split_valid, validity_cascade
-from ffi_etl_spark.pipeline import Pipeline
+from ffi_etl_spark.pipeline import Pipeline, run_concurrently
 from ffi_etl_spark.sources.writers import single_file_csv, single_file_json
 
 # utils.py:112-119 — demographic columns rolled up in gold
@@ -217,10 +218,15 @@ def build_survey_pipeline(
         # enumerates SHOW TABLES IN wiatt.gold filtered by city; here the
         # gold layer is the pipeline's own table namespace, so the list
         # is explicit (and session-global catalog state can't bleed in).
+        # The four exports are independent and run at once. The writers
+        # are looked up in this module when the stage runs, so a writer
+        # replaced here around ``Pipeline.run`` is the one used.
         out = os.path.join(warehouse, "volume")
-        for name in ("roll_up", "census_merged_roll_up"):
-            single_file_json(t[name], os.path.join(out, f"{name}.json"))
-            single_file_csv(t[name], os.path.join(out, f"{name}.csv"))
+        run_concurrently(spark, [
+            partial(write, t[name], os.path.join(out, f"{name}.{ext}"))
+            for name in ("roll_up", "census_merged_roll_up")
+            for write, ext in ((single_file_json, "json"), (single_file_csv, "csv"))
+        ])
         return {}
 
     return pipe

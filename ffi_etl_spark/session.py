@@ -37,6 +37,10 @@ ENGINE_CONFS: dict[str, str] = {
     # as TIMESTAMP_NTZ truncated to micros; catalog._normalize casts it to
     # the session-zoned TIMESTAMP (UTC) — no legacy conf needed
     "spark.ui.enabled": "false",
+    # PySpark 4 records the Python call site of every Column it builds,
+    # in extra py4j round trips that slow plan build; off, a runtime
+    # error loses only the Python line in its query context. Static.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
@@ -82,13 +86,14 @@ def configure(spark: SparkSession) -> SparkSession:
     """Apply engine confs to an externally-created session (driver harness).
 
     A conf that is fixed once the session has started (e.g.
-    ``spark.ui.enabled``) is skipped and logged; any other failure to
-    set a conf raises."""
+    ``spark.ui.enabled`` or the static
+    ``spark.python.sql.dataFrameDebugging.enabled``) is skipped and
+    logged; any other failure to set a conf raises."""
     for k, v in ENGINE_CONFS.items():
         try:
             spark.conf.set(k, v)
         except AnalysisException as e:
-            if e.getCondition() != "CANNOT_MODIFY_CONFIG":
+            if e.getCondition() not in ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"):
                 raise
             logger.info("configure: %s is fixed after session start; skipped", k)
     return spark

@@ -23,6 +23,10 @@ def test_configure_skips_only_confs_fixed_at_start(spark, monkeypatch, caplog):
     with caplog.at_level(logging.INFO, logger=session.__name__):
         assert session.configure(spark) is spark
     assert "spark.ui.enabled" in caplog.text
+    # a static conf: CANNOT_MODIFY_STATIC_CONFIG, skipped the same way;
+    # get_session set it before start
+    assert "spark.python.sql.dataFrameDebugging.enabled" in caplog.text
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     monkeypatch.setitem(session.ENGINE_CONFS, "spark.sql.shuffle.partitions", "not-a-number")
     with pytest.raises(IllegalArgumentException):
         session.configure(spark)

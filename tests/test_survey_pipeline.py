@@ -68,8 +68,7 @@ def _response(rid, **over):
     return base
 
 
-@pytest.fixture(scope="module")
-def gold(spark, tmp_path_factory):
+def _gold_inputs(spark):
     online = _survey_df(
         spark,
         [
@@ -110,13 +109,21 @@ def gold(spark, tmp_path_factory):
                    "Census %": "20.0%", "Display Order": None}),
         ]
     )
-    warehouse = str(tmp_path_factory.mktemp("warehouse"))
-    pipe = build_survey_pipeline(
+    return {"online": online, "offline": offline, "census": census}
+
+
+def _gold_pipeline(warehouse):
+    return build_survey_pipeline(
         warehouse=warehouse,
         open_text_cols=["Anything else you want to tell us?", "not a real column"],
         cols_to_delete=["SessionID"],
     )
-    tables = pipe.run(spark, {"online": online, "offline": offline, "census": census})
+
+
+@pytest.fixture(scope="module")
+def gold(spark, tmp_path_factory):
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    tables = _gold_pipeline(warehouse).run(spark, _gold_inputs(spark))
     tables["__warehouse__"] = warehouse
     return tables
 
@@ -289,6 +296,59 @@ def test_pipeline_stage_runs_one_job_per_table(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
     assert tables["a"].count() == 100
     assert sorted(r.v for r in tables["b"].collect()) == list(range(0, 20, 2))
+
+
+def test_pipeline_failed_write_waits_for_the_other_writes(spark, tmp_path):
+    """A stage's writes run concurrently: when one table cannot be
+    written, ``run`` raises only after the stage's other write has
+    finished, that table is complete on disk, and no writer thread is
+    left behind."""
+    import os
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from ffi_etl_spark.pipeline import Pipeline
+
+    pipe = Pipeline(str(tmp_path / "wh"))
+
+    @pipe.stage("s1")
+    def _s1(spark_, t):
+        bad = spark_.range(10).select(F.raise_error(F.concat(F.lit("unwritable "), F.col("id"))))
+        good = spark_.range(200_000).repartition(8).selectExpr("id", "id % 7 AS k")
+        return {"bad": bad, "good": good}
+
+    threads_before = threading.active_count()
+    with pytest.raises(Exception, match="unwritable"):
+        pipe.run(spark, {})
+    assert threading.active_count() == threads_before
+    good = str(tmp_path / "wh" / "good")
+    assert os.path.isfile(os.path.join(good, "_SUCCESS"))
+    assert spark.read.parquet(good).count() == 200_000
+
+
+def test_gold_pipeline_jobs_per_stage(spark, tmp_path):
+    """Job-count lock on the gold stages, counted through one job group
+    per stage: the concurrent writes and exports run in their stage's
+    group, and the census merge's one-partition tail keeps it at 6."""
+    pipe = _gold_pipeline(str(tmp_path / "wh"))
+    sc = spark.sparkContext
+    groups = {st.name: f"stage-jobs-{tmp_path.name}-{st.name}" for st in pipe.stages}
+    for st in pipe.stages:
+        def wrapped(spark_, t, _fn=st.fn, _group=groups[st.name]):
+            sc.setJobGroup(_group, _group)
+            return _fn(spark_, t)
+
+        st.fn = wrapped
+    try:
+        pipe.run(spark, _gold_inputs(spark))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = {name: len(sc.statusTracker().getJobIdsForGroup(g)) for name, g in groups.items()}
+    assert 1 <= jobs["merge_census"] <= 6, jobs
+    assert 3 <= jobs["roll_up"] <= 5, jobs
+    assert jobs["write_to_volume"] == 4, jobs
 
 
 def test_transform_silver_compiles_within_codegen_limit(spark, tmp_path):
