@@ -1,6 +1,6 @@
 """Text/value cleaning expressions (SURVEY.md §2.2 P1/P6, §2.9 D2/D3).
 
-All reference cleaning is re-expressed as native column expressions so
+All reference cleaning is re-expressed as native SQL expressions so
 an entire cleaning pass is ONE ``select`` (the reference's per-column
 ``withColumn`` loops build O(cols) nested Project nodes —
 transform_alchemer_data.py:28-39 — which Catalyst must then collapse).
@@ -10,9 +10,10 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import StringType
+
+from ffi_etl_spark.functions import sqltext as sql
 
 # Phrases whose normalized form marks an open-text answer as null
 # (utils.py:103-106). NOTE: the missing comma at utils.py:105 fuses
@@ -27,36 +28,46 @@ NULL_PHRASES = [
     "nothings", "nan",
 ]
 
+# The two known mojibake sequences and their repairs, applied in order
+# (utils.py:146-152, transform_alchemer_data.py:20-23).
+MOJIBAKE = [("â€™", "'"), ("Ã", "i")]
 
-def fix_mojibake(c: Column | str) -> Column:
+_PUNCTUATION = sql.string(r"[^\w\s]")
+
+
+def fix_mojibake(expr: str) -> str:
     """Repair the two known mojibake sequences (utils.py:146-152,
-    transform_alchemer_data.py:20-23): ``â€™`` -> ``'`` and ``Ã`` -> ``i``.
+    transform_alchemer_data.py:20-23) in the SQL expression ``expr``:
+    ``â€™`` -> ``'`` and ``Ã`` -> ``i``.
 
     Literal ``replace``, not ``regexp_replace``: applied to every string
     column, the regex form's generated code overflowed whole-stage
     codegen's 64 KB method limit on the survey silver projection."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.replace(F.replace(col, F.lit("â€™"), F.lit("'")), F.lit("Ã"), F.lit("i"))
+    for bad, good in MOJIBAKE:
+        expr = f"replace({expr}, {sql.string(bad)}, {sql.string(good)})"
+    return expr
 
 
 def fix_mojibake_name(name: str) -> str:
     """Same repair applied to a column NAME on the driver
     (transform_alchemer_data.py:13 calls the bare Python fn on headers)."""
-    return name.replace("â€™", "'").replace("Ã", "i")
+    for bad, good in MOJIBAKE:
+        name = name.replace(bad, good)
+    return name
 
 
-def replace_with_null(c: Column | str, phrases: list[str] = NULL_PHRASES) -> Column:
+def replace_with_null(expr: str, phrases: list[str] = NULL_PHRASES) -> str:
     """Null out answers whose lower/punctuation-stripped/trimmed form is
-    in the null-phrase list (utils.py:184-187)."""
-    col = F.col(c) if isinstance(c, str) else c
-    normalized = F.trim(F.regexp_replace(F.lower(col), r"[^\w\s]", ""))
-    return F.when(normalized.isin(phrases), None).otherwise(col)
+    in the null-phrase list (utils.py:184-187); SQL text over ``expr``."""
+    normalized = f"trim(regexp_replace(lower({expr}), {_PUNCTUATION}, ''))"
+    listed = ", ".join(sql.string(p) for p in phrases)
+    return f"CASE WHEN {normalized} IN ({listed}) THEN NULL ELSE {expr} END"
 
 
-def null_nan(c: Column | str) -> Column:
-    """``"nan"`` sentinel string -> NULL (transform_alchemer_data.py:38-39)."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.when(col == "nan", None).otherwise(col)
+def null_nan(expr: str) -> str:
+    """``"nan"`` sentinel string -> NULL (transform_alchemer_data.py:38-39);
+    SQL text over ``expr``."""
+    return f"CASE WHEN {expr} = 'nan' THEN NULL ELSE {expr} END"
 
 
 def clean_strings(df: DataFrame, open_text_cols: Iterable[str] = ()) -> DataFrame:
@@ -66,19 +77,22 @@ def clean_strings(df: DataFrame, open_text_cols: Iterable[str] = ()) -> DataFram
     Order matters and mirrors the reference: mojibake fix
     (transform_alchemer_data.py:20-23) -> null phrases (28-33) ->
     nan-nulling (38-39). Missing open-text columns are tolerated
-    (the reference's lenient loop, 29-33).
+    (the reference's lenient loop, 29-33). Every column's expression is
+    SQL text (see ``functions.sqltext``), so the pass costs a few dozen
+    py4j round trips rather than one per function, literal and column.
     """
     open_set = {c for c in open_text_cols if c in df.columns}
     out = []
     for field in df.schema.fields:
-        c = F.col(f"`{field.name}`")
+        name = sql.ident(field.name)
         if isinstance(field.dataType, StringType):
-            c = fix_mojibake(c)
+            expr = fix_mojibake(name)
             if field.name in open_set:
-                c = replace_with_null(c)
-            c = null_nan(c)
-        out.append(c.alias(field.name))
-    return df.select(out)
+                expr = replace_with_null(expr)
+            out.append(f"{null_nan(expr)} AS {name}")
+        else:
+            out.append(name)
+    return df.selectExpr(*out)
 
 
 def clean_headers(df: DataFrame) -> DataFrame:

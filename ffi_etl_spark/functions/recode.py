@@ -8,11 +8,12 @@ and saves the Python-worker round-trip for 15 columns × every row.
 from __future__ import annotations
 
 from collections.abc import Iterable
-from functools import reduce
 from itertools import chain
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ffi_etl_spark.functions import sqltext as sql
 
 # utils.py:170-176
 LIKERT_MAPPING = {
@@ -54,12 +55,14 @@ LIKERT_COLUMNS = [c for cols in LIKERT_COLUMNS_DICT.values() for c in cols]
 
 
 def map_lookup(c: Column | str, mapping: dict, default) -> Column:
-    """Native dict lookup: ``element_at(create_map(...), col)`` with a
-    default — replaces utils.py:159-181's Python UDF. Unmatched AND null
-    inputs both take the default (``dict.get`` semantics)."""
+    """Native dict lookup: ``element_at(map(...), col)`` with a default —
+    replaces utils.py:159-181's Python UDF. Unmatched AND null inputs
+    both take the default (``dict.get`` semantics). The literal map is
+    one SQL expression (see ``functions.sqltext``), so its keys and
+    values must be strings, integers or booleans."""
     col = F.col(c) if isinstance(c, str) else c
-    lit_map = F.create_map(*[F.lit(x) for x in chain.from_iterable(mapping.items())])
-    return F.coalesce(F.element_at(lit_map, col), F.lit(default))
+    pairs = ", ".join(sql.literal(x) for x in chain.from_iterable(mapping.items()))
+    return F.coalesce(F.element_at(F.expr(f"map({pairs})"), col), F.lit(default))
 
 
 def likert_score(c: Column | str) -> Column:
@@ -68,16 +71,18 @@ def likert_score(c: Column | str) -> Column:
 
 def score_likert_columns(df: DataFrame, domains: dict[str, list[str]] | None = None) -> DataFrame:
     """Score all Likert columns in place, then add per-domain means and
-    the all-questions mean (transform_alchemer_data.py:62-75) in one pass."""
+    the all-questions mean (transform_alchemer_data.py:62-75) in one pass.
+    Each mean is one SQL expression (see ``functions.sqltext``)."""
     domains = domains or LIKERT_COLUMNS_DICT
     all_cols = [c for cols in domains.values() for c in cols]
     df = df.withColumns({c: likert_score(c) for c in all_cols if c in df.columns})
-    means = {}
-    for domain, cols in domains.items():
-        total = reduce(lambda a, b: a + b, [F.col(f"`{c}`") for c in cols])
-        means[domain] = F.round(total / len(cols), 2)
-    everything = reduce(lambda a, b: a + b, [F.col(f"`{c}`") for c in all_cols]) / F.lit(len(all_cols))
-    means["5DW Score: Everything"] = F.round(everything, 2)
+
+    def mean(cols: list[str]) -> Column:
+        total = " + ".join(sql.ident(c) for c in cols)
+        return F.expr(f"round(({total}) / {len(cols)}, 2)")
+
+    means = {domain: mean(cols) for domain, cols in domains.items()}
+    means["5DW Score: Everything"] = mean(all_cols)
     return df.withColumns(means)
 
 

@@ -25,17 +25,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+
+from ffi_etl_spark.functions import sqltext as sql
 
 
 def stringify_with_nan(df: DataFrame, cols: list[str]) -> DataFrame:
     """``astype(str)`` parity for the given columns: cast to string and
-    encode NULL as the literal ``"nan"`` (extract_alchemer_data.py:20-21)."""
-    return df.withColumns(
-        {
-            c: F.coalesce(F.col(f"`{c}`").cast("string"), F.lit("nan"))
-            for c in cols
-        }
+    encode NULL as the literal ``"nan"`` (extract_alchemer_data.py:20-21).
+    The columns keep their places; each expression is SQL text (see
+    ``functions.sqltext``), one py4j round trip per column."""
+    wanted = set(cols)
+    return df.selectExpr(
+        *(
+            f"coalesce(CAST({sql.ident(c)} AS STRING), 'nan') AS {sql.ident(c)}"
+            if c in wanted
+            else sql.ident(c)
+            for c in df.columns
+        )
     )
 
 

@@ -4,6 +4,7 @@ Boundary values mirror transform_alchemer_data.py:153-196 and the
 Likert map at utils.py:170-176.
 """
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -34,6 +35,17 @@ def test_likert_full_map(spark):
 def test_map_lookup_default(spark):
     out = _eval(spark, map_lookup("v", {"x": 10}, -1), [Row(v="x"), Row(v="y")])
     assert out == [10, -1]
+
+
+def test_map_lookup_literal_types(spark):
+    # keys and values go into one SQL map literal: quotes, backslashes,
+    # negative integers and booleans keep their F.lit types
+    out = _eval(spark, map_lookup("v", {"it's": -1, "a\\b": 2}, 0), [Row(v="it's"), Row(v="a\\b")])
+    assert out == [-1, 2]
+    out = _eval(spark, map_lookup("v", {"y": True}, False), [Row(v="y"), Row(v="n")])
+    assert out == [True, False]
+    with pytest.raises(TypeError):
+        map_lookup("v", {"x": 1.5}, 0)
 
 
 def test_age_buckets_boundaries(spark):
