@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 
 # the keep rule and md5 draw live in the library so the example, the
 # gated queries, and their oracles can never silently diverge
-from ffi_etl_spark.queries_pkg.datamix import _md5_key, temperature_sample
+from ffi_etl_spark.functions.hashing import md5_int32
+from ffi_etl_spark.queries_pkg.datamix import temperature_sample
 
 
 def export_shards(
@@ -52,7 +53,7 @@ def export_shards(
     """Sample → shard → order → partitioned write → manifest.
     Returns the manifest rows (one dict per shard)."""
     kept = temperature_sample(docs)
-    sharded = kept.withColumn("shard_id", _md5_key(F.col("doc_id")) % n_shards)
+    sharded = kept.withColumn("shard_id", md5_int32(F.col("doc_id").cast("string")) % n_shards)
     w = Window.partitionBy("shard_id").orderBy("draw", "doc_id")
     ordered = (
         sharded.withColumn(

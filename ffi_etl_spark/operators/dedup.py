@@ -70,7 +70,6 @@ def _verify_join(
     pairs: DataFrame,
     sets: DataFrame,
     id_col: str,
-    broadcast_verify: bool,
 ) -> DataFrame:
     """Attach both documents' hash sets to each candidate pair.
 
@@ -81,10 +80,10 @@ def _verify_join(
     corpora the pair list is 100x the doc count, so the shuffle moves
     ~pairs x 2 x set_width longs. Broadcasting the slim per-doc set
     table instead makes the verify a map-side double lookup (measured
-    2.5x end-to-end at sf0.1: 8.1s -> 3.0s). At 100 TB the per-doc set
-    table no longer fits the driver: pass broadcast_verify=False to
-    fall back to the shuffle join (AQE still picks broadcast per
-    sub-partition where stats allow).
+    2.5x end-to-end at sf0.1: 8.1s -> 3.0s). The broadcast is the only
+    path; a corpus whose per-doc set table outgrows the driver goes
+    through ``dedup_minhash_incremental`` over stored signatures, which
+    semi-joins the sets down to the candidate ids before broadcasting.
 
     Set sizes ride along (``_na``/``_nb``) so the similarity can be
     computed from the intersection alone (inclusion-exclusion) instead
@@ -98,9 +97,7 @@ def _verify_join(
     measured ~8-10% faster on the verify stage at sf0.1 (interleaved
     A/B, result parity asserted) with identical rows out."""
     sized = sets.withColumn("_n", F.size("_hashes"))
-    a, b = sized.alias("_va"), sized.alias("_vb")
-    if broadcast_verify:
-        a, b = F.broadcast(a), F.broadcast(b)
+    a, b = F.broadcast(sized.alias("_va")), F.broadcast(sized.alias("_vb"))
     return (
         pairs.join(a, F.col("id_a") == F.col(f"_va.{id_col}"))
         .join(b, F.col("id_b") == F.col(f"_vb.{id_col}"))
@@ -243,7 +240,6 @@ def dedup_minhash_lsh(
     bands: int = 3,
     threshold: float = 0.5,
     fast: bool = False,
-    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Near-dup pairs: MinHash-LSH candidates verified with exact Jaccard
     on the char-shingle hash sets. rows-per-band = num_perm // bands.
@@ -267,7 +263,7 @@ def dedup_minhash_lsh(
     pairs = _candidate_pairs(hashed, id_col)
     sets = hashed.select(F.col(id_col), F.col("_hashes"))
     verified = (
-        _verify_join(pairs, sets, id_col, broadcast_verify)
+        _verify_join(pairs, sets, id_col)
         .filter(size_bound_filter(threshold))
         .withColumn(
             "jaccard_sim",
@@ -494,7 +490,6 @@ def dedup_minhash_adaptive(
     dup_sim: float = 0.9,
     recall_floor: float = 0.95,
     fast: bool = True,
-    broadcast_verify: bool = True,
     sample_docs: int = 256,
 ) -> DataFrame:
     """Self-tuning ``dedup_minhash_lsh``: probe the corpus's ambient
@@ -539,7 +534,6 @@ def dedup_minhash_adaptive(
         bands=bands,
         threshold=threshold,
         fast=fast,
-        broadcast_verify=broadcast_verify,
     )
 
 
@@ -1100,7 +1094,6 @@ def dedup_minhash_incremental(
     bands: int | None = None,
     threshold: float = 0.5,
     fast: bool = False,
-    broadcast_verify: bool = True,
     corpus_hashed: DataFrame | None = None,
     batch_hashed: DataFrame | None = None,
     dup_sim: float | None = None,
@@ -1257,12 +1250,9 @@ def dedup_minhash_incremental(
             )
         hashed = None
 
-    # the batch id list rides the same broadcast-vs-shuffle switch as
-    # the verify table: broadcastable for a daily batch, shuffle-join
-    # fallback when the batch itself outgrows the driver
-    new_ids = batch.select(F.col(id_col).alias("_id")).distinct()
-    if broadcast_verify:
-        new_ids = F.broadcast(new_ids)
+    # the batch id list is broadcast like the verify table: a daily
+    # batch is small beside the corpus
+    new_ids = F.broadcast(batch.select(F.col(id_col).alias("_id")).distinct())
 
     if corpus_band_index is not None:
         # pruned probe join (VERDICT r08 item 1): the corpus side of
@@ -1281,7 +1271,7 @@ def dedup_minhash_incremental(
         )
         b, c = batch_bands.alias("n"), corpus_bands.alias("c")
         new_old_cands = c.join(
-            F.broadcast(b) if broadcast_verify else b,
+            F.broadcast(b),
             (F.col("n._band_idx") == F.col("c._band_idx"))
             & (F.col("n._band_key") == F.col("c._band_key")),
         ).select(
@@ -1328,14 +1318,14 @@ def dedup_minhash_incremental(
     if corpus_hashed is not None:
         # candidate-restricted verify (VERDICT r08 item 1's second
         # term): the wide per-doc hash sets used to be pulled — and
-        # under broadcast_verify, COLLECTED AND BROADCAST — for the
-        # ENTIRE corpus every call, an O(corpus·set_width) per-batch
-        # bill. Only candidate ids ever reach the verify lookups, so
-        # semi-join the stored state down to them first (candidates are
-        # batch-scale by the incremental design) and union the batch's
-        # own sets; what gets broadcast is then candidate-scale. The
-        # pairs frame feeds both the id list and the verify probe — pin
-        # it so the band join computes once.
+        # COLLECTED AND BROADCAST — for the ENTIRE corpus every call,
+        # an O(corpus·set_width) per-batch bill. Only candidate ids ever
+        # reach the verify lookups, so semi-join the stored state down
+        # to them first (candidates are batch-scale by the incremental
+        # design) and union the batch's own sets; what gets broadcast
+        # is then candidate-scale. The pairs frame feeds both the id
+        # list and the verify probe — pin it so the band join computes
+        # once.
         pairs = _pin(pairs)
         cand = (
             pairs.select(F.col("id_a").alias(id_col))
@@ -1343,7 +1333,7 @@ def dedup_minhash_incremental(
             .distinct()
         )
         sets = corpus_hashed.select(id_col, "_hashes").join(
-            F.broadcast(cand) if broadcast_verify else cand,
+            F.broadcast(cand),
             id_col,
             "left_semi",
         ).unionByName(batch_hashed.select(id_col, "_hashes"))
@@ -1351,7 +1341,7 @@ def dedup_minhash_incremental(
         sets = hashed.select(F.col(id_col), F.col("_hashes"))
     flags = new_ids.withColumn("_is_new", F.lit(True))
     verified = (
-        _verify_join(pairs, sets, id_col, broadcast_verify)
+        _verify_join(pairs, sets, id_col)
         .filter(size_bound_filter(threshold))
         .withColumn(
             "jaccard_sim",
@@ -1460,7 +1450,6 @@ def dedup_ngram_jaccard(
     num_perm: int = 12,
     bands: int = 6,
     threshold: float = 0.4,
-    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Near-dup pairs on word-n-gram sets: LSH candidates (aggressive
     banding for recall), exact n-gram Jaccard verify.
@@ -1490,7 +1479,7 @@ def dedup_ngram_jaccard(
     pairs = _candidate_pairs(hashed, id_col)
     sets = hashed.select(F.col(id_col), F.col("_hashes"))
     return (
-        _verify_join(pairs, sets, id_col, broadcast_verify)
+        _verify_join(pairs, sets, id_col)
         .filter(size_bound_filter(threshold))
         .withColumn(
             "jaccard_sim",
@@ -1510,7 +1499,6 @@ def dedup_containment(
     bands: int = 3,
     threshold: float = 0.9,
     fast: bool = False,
-    broadcast_verify: bool = True,
 ) -> DataFrame:
     """Containment near-dups: pairs where the SMALLER document's
     shingle set is mostly inside the larger's —
@@ -1538,7 +1526,7 @@ def dedup_containment(
     inter = F.size(F.array_intersect(F.col("_ha"), F.col("_hb")))
     containment = inter.cast("double") / F.least(F.col("_na"), F.col("_nb"))
     return (
-        _verify_join(pairs, sets, id_col, broadcast_verify)
+        _verify_join(pairs, sets, id_col)
         .withColumn("containment", containment)
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")

@@ -68,12 +68,17 @@ def _rollup(df: DataFrame, demographics: list[tuple[str, str]]) -> DataFrame:
     )
     cnt = F.col("# of Survey Responses")
     known = F.col("Category") != "Unknown"
-    total_excl_unknown = F.sum(F.when(known, cnt)).over(Window.partitionBy("Demographic"))
-    return grouped.select(
+    total_excl_unknown = F.col("_total")
+    pct = cnt / total_excl_unknown * 100
+    return grouped.withColumn(
+        "_total", F.sum(F.when(known, cnt)).over(Window.partitionBy("Demographic"))
+    ).select(
         F.col("Demographic"),
         F.col("Category"),
         cnt,
-        F.format_string("%.2f%%", cnt / total_excl_unknown * 100).alias(
+        # a null denominator leaves the percent null, not "%.2f%%" of
+        # null ("nu%")
+        F.when(pct.isNotNull(), F.format_string("%.2f%%", pct)).alias(
             "% of Survey Responses"
         ),
         F.when(known, total_excl_unknown.cast("string"))

@@ -55,7 +55,12 @@ def _spread_scan(df: DataFrame) -> DataFrame:
     or order-free (integer sums, deterministic-tie ranks): a float
     sum/avg over the respread rows would change accumulation order by
     ±ulp. Callers keep float-mean aggregates (compute_centroids) on
-    the ORIGINAL frame."""
+    the ORIGINAL frame.
+
+    Precondition: ``df`` is a scan (plus narrow operators), with no
+    exchange in its plan. The split count comes from ``df.rdd``, and
+    converting a plan with shuffles to an RDD runs those shuffle stages
+    as eager jobs under AQE; every caller passes a table scan."""
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
@@ -1421,7 +1426,7 @@ def ann_brp_lsh_pairs(
     md5-derived direction ``r_t`` (``brp_hyperplanes``); candidates
     share any (table, bucket); the verify is the exact sequential-fold
     Euclidean distance (bit-identical to DuckDB's list arithmetic, the
-    knn/_COS precedent). Same scale shape as MLlib's
+    knn/COS precedent). Same scale shape as MLlib's
     ``approxSimilarityJoin``: bucket equi-join, no cross product,
     distinct-before-verify. Output: id_a, id_b, euclid_dist.
 

@@ -27,8 +27,8 @@ This implementation keeps that structure Spark-shaped:
 
 Everything is integer/string arithmetic — no floats anywhere — so
 fixed-round runs are bit-deterministic and the whole iteration
-unrolls into a DuckDB CTE chain (the _kmeans_det_cte recipe, minus
-even the quantization caveats).
+unrolls into a DuckDB CTE chain (the oracle_sql.kmeans_det_cte recipe,
+minus even the quantization caveats).
 
 Determinism contract (both engines): argmax pair by count DESC with
 ties to the lexicographically smallest (left, right); merge

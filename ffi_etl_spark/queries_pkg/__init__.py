@@ -1,56 +1,31 @@
-"""Query definitions, split by surface (reference parity vs extensions).
+"""The query registry: named (spark, sf_dir) -> DataFrame callables and
+their DuckDB oracles.
 
-The registration modules import ORACLE HELPERS from earlier siblings at
-decoration time (e.g. round12 ← round7/extensions, round5 ← round4),
-which is safe only when the modules initialize in registry order. A
-DIRECT ``import ffi_etl_spark.queries_pkg.<X>`` used to skip that
-ordering: X began executing, its ``from ffi_etl_spark.queries import
-query`` pulled in the whole registry, and any LATER sibling that imports
-from X found it partially initialized (ImportError: cannot import name
-… from partially initialized module — bit ``pytest tests/test_round12.py
-tests/test_round9.py`` in isolation, round 12).
-
-Importing the modules HERE, in registry order, fixes every direct-import
-order at once: Python fully initializes a parent package before the
-directly-imported submodule, so by the time X's own body runs, every
-sibling it (or its dependents) needs is complete. The list mirrors
-``ffi_etl_spark/queries.py`` (which remains the authoritative
-registration order; keep the two in sync when adding a module —
-``tests/test_imports.py`` locks the direct-import property, and since
-round 13 parses both lists out of the source, so they cannot drift from
-the lock).
-
-Invariant (ADVICE r12): the FIRST-listed module (reference_surface) must
-not be imported FROM by any sibling at module level — when it is itself
-the direct-import target it is mid-initialization while this registry
-sweep re-enters, so a decoration-time ``from …reference_surface import
-helper`` in any later module would hit the partially-initialized error
-the sweep exists to prevent. Add shared helpers to a non-first module
-(or a helpers module outside the registry list) instead.
+This module imports nothing from the package, so any registration
+module can be imported first. ``ffi_etl_spark/queries.py`` imports the
+registration modules and fixes the registry order.
 """
 
-from ffi_etl_spark.queries_pkg import (  # noqa: F401
-    reference_surface,
-    extensions,
-    olap_spines,
-    olap_spines2,
-    breadth,
-    profiling,
-    behavioral,
-    datamix,
-    audit,
-    round4,
-    analytics,
-    round4b,
-    round4c,
-    round5,
-    fam_modeleval,
-    fam_sketches,
-    fam_textsel,
-    fam_retrieval_events,
-    round6,
-    round7,
-    round8,
-    round9,
-    round12,
-)
+from __future__ import annotations
+
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+
+
+def query(name: str, oracle: str | None = None):
+    def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in QUERIES:
+            raise ValueError(
+                f"duplicate query registration: {name!r} — a silent overwrite "
+                "would shadow one implementation's gate with another's"
+            )
+        QUERIES[name] = fn
+        if oracle is not None:
+            ORACLES[name] = oracle
+        return fn
+
+    return deco

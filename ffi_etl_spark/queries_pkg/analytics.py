@@ -17,7 +17,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import minhash_pairs_cte
 
 # ---------------------------------------------------------------------------
 # Deterministic mode (most frequent value per group)
@@ -229,10 +230,8 @@ def _vocab_growth(spark, sf_dir):
 
 
 def _sim_hist_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _minhash_pairs_cte
-
     return f"""
-WITH {_minhash_pairs_cte()}
+WITH {minhash_pairs_cte()}
 SELECT CAST(floor(jaccard_sim * 10) AS INT) AS sim_bucket,
        CAST(COUNT(*) AS BIGINT) AS n_pairs
 FROM verified WHERE jaccard_sim >= 0.25
@@ -387,10 +386,8 @@ def _power_users_pareto(spark, sf_dir):
 
 
 def _containment_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _minhash_pairs_cte
-
     return f"""
-WITH {_minhash_pairs_cte()}, cont AS (
+WITH {minhash_pairs_cte()}, cont AS (
   SELECT p.id_a, p.id_b,
          len(list_intersect(ha.hashes, hb.hashes))::DOUBLE
            / least(len(ha.hashes), len(hb.hashes))::DOUBLE AS containment

@@ -14,7 +14,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import minhash_pairs_cte
 
 
 # --- exact rolling 7-day distinct users ---------------------------------------
@@ -236,7 +237,6 @@ def _pagerank_oracle(n_iter: int = _PR_ROUNDS, damping: float = 0.85) -> str:
     aware canonicalizer would need driver cooperation the harness
     doesn't offer; this note quantifies the risk instead (same budget
     applies to token_entropy's %.6e column)."""
-    from ffi_etl_spark.queries_pkg.extensions import _minhash_pairs_cte
 
     steps = []
     for k in range(1, n_iter + 1):
@@ -254,7 +254,7 @@ def _pagerank_oracle(n_iter: int = _PR_ROUNDS, damping: float = 0.85) -> str:
 )""")
     chain = ",\n".join(steps)
     return f"""
-WITH {_minhash_pairs_cte()}, pr_pairs AS (
+WITH {minhash_pairs_cte()}, pr_pairs AS (
   SELECT id_a, id_b FROM verified WHERE jaccard_sim >= 0.5
 ), edges AS (
   SELECT id_a AS a, id_b AS b FROM pr_pairs

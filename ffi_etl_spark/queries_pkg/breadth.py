@@ -13,7 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import load_tables, table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
 
 
 # --- semi-structured: JSON path extraction inside an aggregation --------------

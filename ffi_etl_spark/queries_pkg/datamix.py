@@ -15,13 +15,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
-
-
-def _md5_key(col):
-    """First 32 bits of md5 as a BIGINT in [0, 2^32) — the engine's
-    portable uniform draw."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
+from ffi_etl_spark.functions.hashing import md5_int32
+from ffi_etl_spark.queries_pkg import query
 
 
 # --- deterministic shard assignment -------------------------------------------
@@ -49,7 +44,7 @@ def _shard_assignment(spark, sf_dir):
     on both engines."""
     d = table(spark, sf_dir, "documents")
     return (
-        d.withColumn("shard_id", _md5_key(F.col("doc_id")) % 16)
+        d.withColumn("shard_id", md5_int32(F.col("doc_id").cast("string")) % 16)
         .groupBy("shard_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -104,7 +99,7 @@ def _mixture_balance(spark, sf_dir):
         d.join(F.broadcast(counts), "source")
         .join(F.broadcast(min_n))
         .where(
-            _md5_key(F.col("doc_id")).cast("decimal(38,0)") * F.col("n_total")
+            md5_int32(F.col("doc_id").cast("string")).cast("decimal(38,0)") * F.col("n_total")
             < F.col("min_n").cast("decimal(38,0)") * F.lit(4294967296)
         )
         .groupBy("source")
@@ -171,7 +166,7 @@ def _mixture_temperature(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_total"))
     min_n = counts.agg(F.min("n_total").alias("min_n"))
-    draw = _md5_key(F.col("doc_id"))
+    draw = md5_int32(F.col("doc_id").cast("string"))
     kept = (
         d.join(F.broadcast(counts), "source")
         .join(F.broadcast(min_n))
@@ -218,7 +213,7 @@ def temperature_sample(d):
     return (
         d.join(F.broadcast(counts), "source")
         .join(F.broadcast(min_n))
-        .where(_md5_key(F.col("doc_id")) < _temp_threshold())
+        .where(md5_int32(F.col("doc_id").cast("string")) < _temp_threshold())
         .drop("n_total", "min_n")
     )
 
@@ -262,7 +257,7 @@ def _training_export(spark, sf_dir):
     is the final 8-group manifest aggregate."""
     kept = temperature_sample(table(spark, sf_dir, "documents"))
     return (
-        kept.withColumn("shard_id", _md5_key(F.col("doc_id")) % 8)
+        kept.withColumn("shard_id", md5_int32(F.col("doc_id").cast("string")) % 8)
         .groupBy("shard_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -366,7 +361,7 @@ def _reservoir_sample(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", "source", "n_chars")
-        .orderBy(_md5_key(F.col("doc_id")), F.col("doc_id"))
+        .orderBy(md5_int32(F.col("doc_id").cast("string")), F.col("doc_id"))
         .limit(100)
     )
 
@@ -456,7 +451,7 @@ def _training_order(spark, sf_dir):
     return (
         d.select(
             "doc_id",
-            (_md5_key(F.col("doc_id")) % 8).alias("shard_id"),
+            (md5_int32(F.col("doc_id").cast("string")) % 8).alias("shard_id"),
             F.md5(F.concat(F.lit("seed1:"), F.col("doc_id").cast("string"))).alias(
                 "draw"
             ),

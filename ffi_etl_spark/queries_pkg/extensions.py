@@ -29,7 +29,17 @@ from ffi_etl_spark.operators.windows import (
     sliding_agg,
     tumbling_agg,
 )
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import (
+    COS,
+    MINHASH_ORACLE,
+    bands_sql,
+    jround,
+    kmeans_det_cte,
+    minhash_pairs_cte,
+    nearest_cells_cte,
+    sig_sql,
+)
 
 # ---------------------------------------------------------------------------
 # dedup tier 1: exact content hash
@@ -55,69 +65,8 @@ def _dedup_exact(spark, sf_dir):
 # universal-hash MinHash signature, banded keys, verified pairs.
 # ---------------------------------------------------------------------------
 
-_MINHASH_PRIME = 4294967311
 
-
-def _sig_sql(num_perm: int) -> str:
-    """list of MinHash slots over the `hashes` list column."""
-    slots = ", ".join(
-        f"list_min([ (h * {2 * p + 1} + {7919 * p + 13}) % {_MINHASH_PRIME} for h in hashes ])"
-        for p in range(num_perm)
-    )
-    return f"[{slots}]"
-
-
-def _bands_sql(bands: int, rows: int) -> str:
-    keys = ", ".join(
-        f"array_to_string(sig[{1 + b * rows}:{(b + 1) * rows}], '_')" for b in range(bands)
-    )
-    return f"[{keys}]"
-
-
-def _minhash_pairs_cte(
-    source: str = "documents", num_perm: int = 12, bands: int = 3
-) -> str:
-    """The MinHash-LSH pair pipeline as a flat CTE list over ``source``
-    (must expose doc_id, text) ending in a ``verified`` relation —
-    reusable standalone and inside composed oracles. Parametric in the
-    signature width and band split so non-default tiers (the adaptive
-    chooser's (24, 4, 6) on this corpus — queries_pkg/round7.py) share
-    the same bit-exact md5 mirror."""
-    rows = num_perm // bands
-    return f"""hashed AS (
-  SELECT doc_id,
-         list_distinct([
-           ('0x' || substr(md5(substr(text, i, 5)), 1, 8))::BIGINT
-           for i in generate_series(1, greatest(len(text) - 4, 1))
-         ]) AS hashes
-  FROM {source}
-), sigs AS (
-  SELECT doc_id, hashes, {_sig_sql(num_perm)} AS sig FROM hashed
-), banded AS (
-  SELECT doc_id, hashes, unnest({_bands_sql(bands, rows)}) AS band_key,
-         unnest(generate_series(0, {bands - 1})) AS band_idx
-  FROM sigs
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-), verified AS (
-  SELECT p.id_a, p.id_b,
-         len(list_intersect(ha.hashes, hb.hashes))::DOUBLE
-           / len(list_distinct(ha.hashes || hb.hashes))::DOUBLE AS jaccard_sim
-  FROM pairs p
-  JOIN hashed ha ON ha.doc_id = p.id_a
-  JOIN hashed hb ON hb.doc_id = p.id_b
-)"""
-
-
-_MINHASH_ORACLE = f"""
-WITH {_minhash_pairs_cte()}
-SELECT * FROM verified WHERE jaccard_sim >= 0.5
-"""
-
-
-@query("dedup_minhash", oracle=_MINHASH_ORACLE)
+@query("dedup_minhash", oracle=MINHASH_ORACLE)
 def _dedup_minhash(spark, sf_dir):
     return dedup_minhash_lsh(table(spark, sf_dir, "documents"))
 
@@ -129,7 +78,7 @@ def _dedup_minhash(spark, sf_dir):
 # tests/test_round8.py::test_incremental_default_split_pinned so a
 # probe/chooser/testdata drift breaks a test before this oracle.
 _INCREMENTAL_ORACLE = f"""
-WITH {_minhash_pairs_cte(num_perm=24, bands=4)}
+WITH {minhash_pairs_cte(num_perm=24, bands=4)}
 SELECT id_a, id_b, jaccard_sim,
        CASE WHEN id_a % 10 = 0 AND id_b % 10 = 0 THEN 'new_new'
             ELSE 'new_old' END AS pair_type
@@ -168,7 +117,7 @@ def _dedup_minhash_incremental(spark, sf_dir):
         raise AssertionError(
             f"adaptive default resolved {split} on this corpus subset, but "
             "the DuckDB oracle is pinned at (24, 4) — re-pin the oracle's "
-            "_minhash_pairs_cte(num_perm, bands) to the new pick (and "
+            "minhash_pairs_cte(num_perm, bands) to the new pick (and "
             "tests/test_round8.py::test_incremental_default_split_pinned)"
         )
     return dedup_minhash_incremental(corpus, batch, num_perm=24, bands=4)
@@ -176,7 +125,7 @@ def _dedup_minhash_incremental(spark, sf_dir):
 
 _COMPONENTS_ORACLE = f"""
 WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({_MINHASH_ORACLE})
+  SELECT id_a, id_b FROM ({MINHASH_ORACLE})
 ), edges AS (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION ALL
@@ -269,9 +218,9 @@ WITH toked AS (
          ]) AS hashes
   FROM toked
 ), sigs AS (
-  SELECT doc_id, hashes, {_sig_sql(12)} AS sig FROM grams
+  SELECT doc_id, hashes, {sig_sql(12)} AS sig FROM grams
 ), banded AS (
-  SELECT doc_id, hashes, unnest({_bands_sql(6, 2)}) AS band_key,
+  SELECT doc_id, hashes, unnest({bands_sql(6, 2)}) AS band_key,
          unnest(generate_series(0, 5)) AS band_idx
   FROM sigs
 ), pairs AS (
@@ -299,18 +248,13 @@ def _dedup_ngram_jaccard(spark, sf_dir):
 # similarity search over embeddings (array<float>)
 # ---------------------------------------------------------------------------
 
-_COS = (
-    "list_dot_product({a}, {b}) / "
-    "(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-)
-
 _KNN_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id % 100 = 0
 ), c AS (
   SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings
 ), scored AS (
-  SELECT query_id, neighbor_id, {_COS.format(a='qv', b='cv')} AS cosine_sim
+  SELECT query_id, neighbor_id, {COS.format(a='qv', b='cv')} AS cosine_sim
   FROM c CROSS JOIN q WHERE neighbor_id <> query_id
 ), ranked AS (
   SELECT query_id, neighbor_id, cosine_sim,
@@ -338,7 +282,7 @@ WITH b AS (
   SELECT vec_id, embedding::DOUBLE[] AS v, {_SIGN_BUCKET} AS bucket FROM embeddings
 ), pairs AS (
   SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-         {_COS.format(a='a.v', b='bb.v')} AS cosine_sim
+         {COS.format(a='a.v', b='bb.v')} AS cosine_sim
   FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
 )
 SELECT id_a, id_b, cosine_sim FROM pairs WHERE cosine_sim >= 0.15
@@ -381,11 +325,6 @@ def _dedup_embedding(spark, sf_dir):
 # text analysis over documents
 # ---------------------------------------------------------------------------
 
-def _jround(x: str, n: int) -> str:
-    """DuckDB replica of Spark F.round (HALF_UP on shortest decimal repr)."""
-    return f"CAST(round(try_cast(CAST(({x}) AS VARCHAR) AS DECIMAL(30,15)), {n}) AS DOUBLE)"
-
-
 _STOPWORDS = r"\b(the|a|an|and|or|of|to|in|is|it)\b"
 _TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -404,9 +343,9 @@ WITH base AS (
   FROM documents
 )
 SELECT doc_id, n_chars, n_tokens_ws, n_tokens_bpe,
-       {_jround('punct_ratio_raw', 6)} AS punct_ratio,
-       {_jround('stopword_ratio_raw', 6)} AS stopword_ratio,
-       {_jround('mean_word_len_raw', 6)} AS mean_word_len,
+       {jround('punct_ratio_raw', 6)} AS punct_ratio,
+       {jround('stopword_ratio_raw', 6)} AS stopword_ratio,
+       {jround('mean_word_len_raw', 6)} AS mean_word_len,
        ((CASE WHEN n_chars BETWEEN 100 AND 10000 THEN 1.0 ELSE 0.0 END)
         + (CASE WHEN punct_ratio_raw < 0.1 THEN 1.0 ELSE 0.0 END)
         + (CASE WHEN stopword_ratio_raw > 0.05 THEN 1.0 ELSE 0.0 END)
@@ -467,7 +406,7 @@ WITH toked AS (
          ]) AS hashes
   FROM toked
 ), sigs AS (
-  SELECT doc_id, {_sig_sql(4)} AS sig FROM grams
+  SELECT doc_id, {sig_sql(4)} AS sig FROM grams
 )
 SELECT doc_id,
        array_to_string(list_transform(sig, x -> printf('%x', x)), '-') AS fingerprint
@@ -682,7 +621,8 @@ def _multimodal_frames(spark, sf_dir):
 # per-cell search (the scale path when |queries| is large).
 # ---------------------------------------------------------------------------
 
-_IVF_ORACLE = f"""
+# The label-centroid cell model and the top-10 tail both IVF gates share.
+_IVF_HEAD = """
 WITH e AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ), cent AS (
@@ -693,21 +633,8 @@ WITH e AS (
     GROUP BY label, i
   )
   GROUP BY label
-), assign AS (
-  SELECT vec_id, v, centroid_id FROM (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {_COS.format(a='e.v', b='c.centroid')} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cent c
-  ) WHERE rk = 1
-), scored AS (
-  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         {_COS.format(a='q.v', b='n.v')} AS cosine_sim
-  FROM assign q JOIN assign n USING (centroid_id)
-  WHERE q.vec_id % 100 = 0 AND n.vec_id <> q.vec_id
-), ranked AS (
+)"""
+_IVF_TAIL = """, ranked AS (
   SELECT query_id, neighbor_id, cosine_sim,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
@@ -715,6 +642,13 @@ WITH e AS (
 )
 SELECT query_id, neighbor_id, cosine_sim, rank::INT AS rank FROM ranked WHERE rank <= 10
 """
+
+_IVF_ORACLE = f"""{_IVF_HEAD}, {nearest_cells_cte("assign", cells="cent")}, scored AS (
+  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+         {COS.format(a='q.v', b='n.v')} AS cosine_sim
+  FROM assign q JOIN assign n USING (centroid_id)
+  WHERE q.vec_id % 100 = 0 AND n.vec_id <> q.vec_id
+){_IVF_TAIL}"""
 
 
 @query("ann_ivf_topk", oracle=_IVF_ORACLE)
@@ -726,49 +660,14 @@ def _ann_ivf_topk(spark, sf_dir):
     return ann_ivf_topk(emb, queries, dim=64)
 
 
-_IVF_NPROBE2_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
-), cent AS (
-  SELECT label AS centroid_id, list(avg_x ORDER BY i) AS centroid
-  FROM (
-    SELECT label, i, avg(v[i]) AS avg_x
-    FROM e CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY label, i
-  )
-  GROUP BY label
-), assign_c AS (
-  SELECT vec_id, v, centroid_id FROM (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {{cos_ec}} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cent c
-  ) WHERE rk = 1
-), assign_q AS (
-  SELECT vec_id, v, centroid_id FROM (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {{cos_ec}} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cent c
-    WHERE e.vec_id % 100 = 0
-  ) WHERE rk <= 2
-), scored AS (
+_ASSIGN_C = nearest_cells_cte("assign_c", cells="cent")
+_ASSIGN_Q = nearest_cells_cte("assign_q", cells="cent", mod=100, rk=2)
+_IVF_NPROBE2_ORACLE = f"""{_IVF_HEAD}, {_ASSIGN_C}, {_ASSIGN_Q}, scored AS (
   SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         {_COS.format(a='q.v', b='n.v')} AS cosine_sim
+         {COS.format(a='q.v', b='n.v')} AS cosine_sim
   FROM assign_q q JOIN assign_c n USING (centroid_id)
   WHERE n.vec_id <> q.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine_sim, rank::INT AS rank FROM ranked WHERE rank <= 10
-""".format(cos_ec=_COS.format(a="e.v", b="c.centroid"))
+){_IVF_TAIL}"""
 
 
 @query("ann_ivf_nprobe2", oracle=_IVF_NPROBE2_ORACLE)
@@ -840,7 +739,7 @@ def _approx_distinct_users(spark, sf_dir):
 @query(
     "dedup_minhash_fast",
     oracle=f"""
-WITH {_minhash_pairs_cte()}
+WITH {minhash_pairs_cte()}
 SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs_md5,
        CAST(1 AS INT) AS fast_recall_ok,
        CAST(1 AS INT) AS fast_precision_ok
@@ -940,7 +839,7 @@ def _brp_oracle(threshold: float = 1.2, bucket_length: float = 2.0,
     brp_hyperplanes) emitted here as ``m/1000.0`` literals so both
     engines parse the identical double; dot products and the
     squared-diff Euclidean fold are sequential list arithmetic —
-    bit-identical to Spark's zip_with/aggregate folds (the knn/_COS
+    bit-identical to Spark's zip_with/aggregate folds (the knn/COS
     precedent), so bucket floors and the threshold compare agree
     exactly."""
     from ffi_etl_spark.operators.similarity import brp_hyperplanes
@@ -1153,7 +1052,7 @@ qd AS (SELECT d.doc_id, d.text FROM documents d
 canon AS (SELECT MIN(doc_id) AS doc_id FROM qd GROUP BY md5(text)),
 cd AS (SELECT d.doc_id, d.text FROM qd d
        WHERE d.doc_id IN (SELECT doc_id FROM canon)),
-{_minhash_pairs_cte("cd")},
+{minhash_pairs_cte("cd")},
 np AS (SELECT id_a, id_b FROM verified WHERE jaccard_sim >= 0.5),
 edges AS (
   SELECT id_a AS a, id_b AS b FROM np
@@ -1262,54 +1161,10 @@ def _concurrent_sessions(spark, sf_dir):
     )
 
 
-def _kmeans_det_cte(
-    k: int, n_iter: int, dim: int = 64, scale_bits: int = 20,
-    source: str = "embeddings",
-) -> str:
-    """Unrolled deterministic-Lloyd CTE chain (the pagerank_centrality
-    recipe applied to k-means, VERDICT r04 recipe a): ends in relation
-    ``a{n_iter}`` = (vec_id, v, centroid_id). Legal as a differential
-    oracle because the engine's ``kmeans_lloyd(quantize_bits=...)``
-    mode makes every round bit-stable: centroids are exact integer
-    sums (``SUM(FLOOR(x·2^bits))`` — order-independent BIGINT
-    arithmetic, no float-mean accumulation drift), cosine is the
-    sequential fold both engines share bit-for-bit (the knn/_COS
-    precedent), and the argmax tie-breaks to the lowest centroid_id on
-    both sides — so the iterated assignment is IDENTICAL, not merely
-    close."""
-    scale = f"{1 << scale_bits}.0"
-    steps = []
-    for r in range(1, n_iter + 1):
-        steps.append(f"""c{r} AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{r - 1} CROSS JOIN (SELECT unnest(generate_series(1, {dim})) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), a{r} AS (
-  SELECT vec_id, v, centroid_id FROM (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {_COS.format(a='e.v', b='c.centroid')} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN c{r} c
-  ) WHERE rk = 1
-)""")
-    chain = ",\n".join(steps)
-    return f"""e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM {source}
-), a0 AS (
-  SELECT vec_id, v, CAST(vec_id % {k} AS INT) AS centroid_id FROM e
-),
-{chain}"""
-
-
 _KMEANS_K, _KMEANS_ROUNDS = 5, 3
 
 _KMEANS_ORACLE = f"""
-WITH {_kmeans_det_cte(_KMEANS_K, _KMEANS_ROUNDS)}
+WITH {kmeans_det_cte(_KMEANS_K, _KMEANS_ROUNDS)}
 SELECT centroid_id, CAST(COUNT(*) AS BIGINT) AS n_members,
        MIN(vec_id) AS first_member
 FROM a{_KMEANS_ROUNDS} GROUP BY centroid_id ORDER BY centroid_id

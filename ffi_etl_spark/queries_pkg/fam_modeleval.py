@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import CONFUSION_REPORT_SQL
 from ffi_etl_spark.operators.inference import DEMO_TREES as _TREES
 
 # ---------------------------------------------------------------------------
@@ -49,34 +50,7 @@ def _scored_events(spark, sf_dir):
 
 def _report_oracle() -> str:
     return f"""
-WITH {_scored_cte()}, pairs AS (
-  SELECT y, p, CAST(COUNT(*) AS BIGINT) AS n FROM scored GROUP BY y, p
-), by_true AS (
-  SELECT y AS cls, CAST(SUM(n) AS BIGINT) AS support,
-         CAST(SUM(CASE WHEN p = y THEN n ELSE 0 END) AS BIGINT) AS tp
-  FROM pairs GROUP BY y
-), by_pred AS (
-  SELECT p AS cls, CAST(SUM(n) AS BIGINT) AS n_pred FROM pairs GROUP BY p
-), rep AS (
-  SELECT COALESCE(t.cls, q.cls) AS cls,
-         COALESCE(t.tp, 0) AS tp,
-         COALESCE(q.n_pred, 0) - COALESCE(t.tp, 0) AS fp,
-         COALESCE(t.support, 0) - COALESCE(t.tp, 0) AS fn,
-         COALESCE(t.support, 0) AS support
-  FROM by_true t FULL OUTER JOIN by_pred q ON t.cls = q.cls
-)
-SELECT CAST(cls AS BIGINT) AS cls, CAST(tp AS BIGINT) AS tp,
-       CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn,
-       CAST(support AS BIGINT) AS support,
-       CASE WHEN tp + fp > 0
-            THEN CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS prec,
-       CASE WHEN tp + fn > 0
-            THEN CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS recall,
-       CASE WHEN 2 * tp + fp + fn > 0
-            THEN CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE)
-       END AS f1
-FROM rep
-"""
+WITH {_scored_cte()}, {CONFUSION_REPORT_SQL}"""
 
 
 @query("model_classification_report", oracle=_report_oracle())

@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import INT8_CODES_CTE
 
 # ---------------------------------------------------------------------------
 # Sparse tf-idf cosine retrieval ("more like this")
@@ -193,19 +194,7 @@ def _mmr_oracle() -> str:
         f"SELECT * FROM s{r}" for r in range(1, _MMR_K + 1)
     )
     return f"""
-WITH ex AS (
-  SELECT vec_id,
-         unnest(embedding::DOUBLE[]) AS x,
-         unnest(range(0, len(embedding))) AS dim
-  FROM embeddings
-), stats AS (
-  SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM ex GROUP BY dim
-), codes AS (
-  SELECT vec_id, dim,
-         CASE WHEN mx = mn THEN 0
-              ELSE CAST(floor(((x - mn) * 255.0) / (mx - mn)) AS INT) END AS code
-  FROM ex JOIN stats USING (dim)
-), d2q AS MATERIALIZED (
+WITH {INT8_CODES_CTE}, d2q AS MATERIALIZED (
   SELECT c.vec_id AS id,
          CAST(SUM((c.code - p.code) * (c.code - p.code)) AS BIGINT) AS d2q
   FROM codes c

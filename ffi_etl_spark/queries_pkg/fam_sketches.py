@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
 
 # ---------------------------------------------------------------------------
 # HyperLogLog distinct sketch (per-group, mergeable, cross-engine exact)

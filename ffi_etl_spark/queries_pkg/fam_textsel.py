@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import DSIR_ORACLE, INT8_CODES_CTE, MINHASH_ORACLE
 
 # ---------------------------------------------------------------------------
 # Unigram-LM Viterbi segmentation (tokenizer-family completion)
@@ -53,7 +54,10 @@ def _uni_dp_chain(prefix: str, vocab_cte: str, base_cte: str) -> tuple[str, str]
     return ",\n".join(rounds), finals
 
 
-def _unigram_oracle() -> str:
+def _unigram_seed_cte() -> str:
+    """raw … vocab: the frequency-seeded piece vocabulary with
+    fixed-point ln scores over the top words, and s0: the segmentation
+    DP's start row per word."""
     from ffi_etl_spark.operators.tokenizer import (
         UNI_MAX_PIECE,
         UNI_MAX_WORD,
@@ -62,9 +66,7 @@ def _unigram_oracle() -> str:
     )
 
     s, mp, wcap, vcap = float(1 << UNI_SCALE_BITS), UNI_MAX_PIECE, 5000, UNI_VOCAB
-    rounds_sql, finals = _uni_dp_chain("s", "vocab", "s0")
-    return rf"""
-WITH raw AS (
+    return rf"""raw AS (
   SELECT unnest(string_split_regex(trim(text), '\s+')) AS raw FROM documents
 ), lex AS MATERIALIZED (
   SELECT substr(raw, 1, {UNI_MAX_WORD}) AS w, CAST(COUNT(*) AS BIGINT) AS freq
@@ -95,7 +97,13 @@ vocab AS MATERIALIZED (
   SELECT w, CAST(length(w) AS INT) AS wlen, CAST(0 AS BIGINT) AS score,
          CAST(0 AS BIGINT) AS n, '' AS path
   FROM lex
-), {rounds_sql}, res AS (
+)"""
+
+
+def _unigram_oracle() -> str:
+    rounds_sql, finals = _uni_dp_chain("s", "vocab", "s0")
+    return rf"""
+WITH {_unigram_seed_cte()}, {rounds_sql}, res AS (
   {finals}
 )
 SELECT w, CAST(wlen AS INT) AS wlen, CAST(n AS BIGINT) AS n_pieces,
@@ -131,19 +139,7 @@ _CN_ANCHORS, _CN_HARD, _CN_RAND = (0, 1, 2), 5, 5
 def _cn_oracle() -> str:
     anchors = ", ".join(str(a) for a in _CN_ANCHORS)
     return f"""
-WITH ex AS (
-  SELECT vec_id,
-         unnest(embedding::DOUBLE[]) AS x,
-         unnest(range(0, len(embedding))) AS dim
-  FROM embeddings
-), stats AS (
-  SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM ex GROUP BY dim
-), codes AS (
-  SELECT vec_id, dim,
-         CASE WHEN mx = mn THEN 0
-              ELSE CAST(floor(((x - mn) * 255.0) / (mx - mn)) AS INT) END AS code
-  FROM ex JOIN stats USING (dim)
-), probes AS (
+WITH {INT8_CODES_CTE}, probes AS (
   SELECT vec_id AS anchor, dim, code AS pcode FROM codes
   WHERE vec_id IN ({anchors})
 ), dists AS (
@@ -424,49 +420,13 @@ def _zipf_exponent_fit(spark, sf_dir):
 
 
 def _unigram_em_oracle() -> str:
-    from ffi_etl_spark.operators.tokenizer import (
-        UNI_MAX_PIECE,
-        UNI_MAX_WORD,
-        UNI_SCALE_BITS,
-        UNI_VOCAB,
-    )
+    from ffi_etl_spark.operators.tokenizer import UNI_SCALE_BITS
 
-    s, mp, wcap, vcap = float(1 << UNI_SCALE_BITS), UNI_MAX_PIECE, 5000, UNI_VOCAB
+    s = float(1 << UNI_SCALE_BITS)
     rounds1, finals1 = _uni_dp_chain("s", "vocab", "s0")
     rounds2, finals2 = _uni_dp_chain("t", "vocab2", "s0")
     return rf"""
-WITH raw AS (
-  SELECT unnest(string_split_regex(trim(text), '\s+')) AS raw FROM documents
-), lex AS MATERIALIZED (
-  SELECT substr(raw, 1, {UNI_MAX_WORD}) AS w, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM raw WHERE raw <> '' GROUP BY 1
-  ORDER BY freq DESC, w LIMIT {wcap}
-), spans AS (
-  SELECT piece, CAST(SUM(freq) AS BIGINT) AS cnt FROM (
-    SELECT l.freq, substr(l.w, j.j, s.l) AS piece
-    FROM lex l
-    CROSS JOIN (SELECT unnest(generate_series(1, {UNI_MAX_WORD})) AS j) j
-    CROSS JOIN (SELECT unnest(generate_series(1, {mp})) AS l) s
-    WHERE j.j + s.l - 1 <= length(l.w)
-  ) GROUP BY piece
-), topv AS MATERIALIZED (
-  SELECT piece, cnt FROM spans ORDER BY cnt DESC, piece LIMIT {vcap}
-), chars AS (
-  SELECT piece, cnt FROM spans WHERE length(piece) = 1
-), vocab0 AS (
-  SELECT piece, MAX(cnt) AS cnt
-  FROM (SELECT * FROM topv UNION ALL SELECT * FROM chars) GROUP BY piece
-), tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM vocab0),
-vocab AS MATERIALIZED (
-  SELECT piece,
-         CAST(FLOOR({s!r} * ln(CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE)))
-              AS BIGINT) AS score_q
-  FROM vocab0 CROSS JOIN tot
-), s0 AS MATERIALIZED (
-  SELECT w, CAST(length(w) AS INT) AS wlen, CAST(0 AS BIGINT) AS score,
-         CAST(0 AS BIGINT) AS n, '' AS path
-  FROM lex
-), {rounds1}, res1 AS MATERIALIZED (
+WITH {_unigram_seed_cte()}, {rounds1}, res1 AS MATERIALIZED (
   {finals1}
 ), usage AS MATERIALIZED (
   SELECT piece, CAST(SUM(freq) AS BIGINT) AS used FROM (
@@ -514,11 +474,9 @@ def _unigram_em_refit(spark, sf_dir):
 
 
 def _lss_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _MINHASH_ORACLE
-
     return f"""
 WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({_MINHASH_ORACLE})
+  SELECT id_a, id_b FROM ({MINHASH_ORACLE})
 ), edges AS (
   SELECT id_a AS a, id_b AS b FROM pairs
   UNION ALL SELECT id_b, id_a FROM pairs
@@ -586,10 +544,8 @@ _DSIR_BUDGET = 10_000
 
 
 def _dsir_budget_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.round5 import _DSIR_ORACLE
-
     return rf"""
-WITH w AS ({_DSIR_ORACLE}
+WITH w AS ({DSIR_ORACLE}
 ), tk AS (
   SELECT doc_id,
          CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS ntok

@@ -19,7 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
 
 
 # --- q7 shape: volume shipping between two nations, two dim aliases -----------

@@ -35,7 +35,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
 
 _DEC = "decimal(27,8)"
 

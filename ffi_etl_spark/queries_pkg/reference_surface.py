@@ -12,7 +12,8 @@ from ffi_etl_spark.functions.recode import bucketize, map_lookup, zip5
 from ffi_etl_spark.operators.census import merge_census
 from ffi_etl_spark.operators.rollup import demographic_rollup, rollup_all
 from ffi_etl_spark.operators.validity import split_valid, validity_cascade
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import jround
 
 
 # --- A1-A5: demographic roll-up (flagship; utils.py:190-223) -----------------
@@ -439,38 +440,12 @@ def _union_rollup_multi(spark, sf_dir):
 # sides to exist at every scale factor. JROUND in the oracle replicates
 # Spark's F.round (BigDecimal-on-shortest-repr, HALF_UP).
 
-def _jround(x: str, n: int) -> str:
-    return f"CAST(round(try_cast(CAST(({x}) AS VARCHAR) AS DECIMAL(30,12)), {n}) AS DOUBLE)"
-
-
-_CENSUS_ORACLE = f"""
-WITH cust_n AS (
-  SELECT n_name FROM customer JOIN nation ON c_nationkey = n_nationkey
-  WHERE c_nationkey < 20
-), g AS (
-  SELECT n_name AS cat, COUNT(*) AS cnt FROM cust_n GROUP BY 1
-), t AS (
-  SELECT g.*, SUM(CASE WHEN cat <> 'Unknown' THEN cnt END) OVER () AS total_excl FROM g
-), rollup AS (
-  SELECT 'Nation' AS rd, cat AS rc,
-         cnt AS n_resp,
-         printf('%.2f%%', CAST(round(try_cast(CAST((cnt * 100.0 / total_excl) AS VARCHAR) AS DECIMAL(30,12)), 2) AS DOUBLE)) AS pct_resp,
-         CASE WHEN cat <> 'Unknown' THEN CAST(total_excl AS VARCHAR) ELSE '' END AS total_resp
-  FROM t
-), sc AS (
-  SELECT n_name, n_nationkey, n_regionkey, COUNT(*) AS scnt
-  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-  WHERE n_nationkey >= 5
-  GROUP BY 1, 2, 3
-), census AS (
-  SELECT 'Nation' AS cd, n_name AS cc,
-         printf('%.1f%%', CAST(round(try_cast(CAST((scnt * 100.0 / SUM(scnt) OVER ()) AS VARCHAR) AS DECIMAL(30,12)), 1) AS DOUBLE)) AS census_pct_str,
-         CASE WHEN n_regionkey = 2 THEN NULL ELSE n_nationkey END AS display_order
-  FROM sc
-), j AS (
-  SELECT * FROM census FULL OUTER JOIN rollup ON cd = rd AND cc = rc
-), md AS (SELECT max(o_orderdate) AS maxd FROM orders),
-s1 AS (
+def _merged_select(s2_note: str = "") -> str:
+    """merge_census.py's steps after the census ⟗ roll-up join, over
+    ``j`` (the joined rows) and ``md`` (the latest response date): gap
+    fill, key consolidation, the representation columns, and the gold
+    SELECT."""
+    return f"""s1 AS (
   SELECT cd, cc, census_pct_str, display_order, rd, rc,
     CASE WHEN rd IS NULL AND rc IS NULL
          THEN first_value(total_resp IGNORE NULLS) OVER (
@@ -480,10 +455,7 @@ s1 AS (
     CASE WHEN rd IS NULL AND rc IS NULL THEN '0' ELSE pct_resp END AS pct_resp
   FROM j
 ), s2 AS (
-  -- two-sided key consolidation (merge_census.py:38-39,49-54); the :60-68
-  -- re-fill is dead after it (condition references coalesced keys) and the
-  -- engine mirrors that, so it is omitted here
-  SELECT total_resp, n_resp, pct_resp, display_order,
+{s2_note}  SELECT total_resp, n_resp, pct_resp, display_order,
     CASE WHEN cd IS NULL AND cc IS NULL THEN NULL ELSE census_pct_str END AS census_pct_str,
     COALESCE(cd, rd) AS "Demographic", COALESCE(cc, rc) AS "Category"
   FROM s1
@@ -505,20 +477,55 @@ s1 AS (
   FROM s5
 ), s7 AS (
   SELECT *, CASE WHEN "Representation Status" IN ('Under-Represented', 'Over-Represented')
-                 THEN {_jround('abs(diff * try_cast("Total Responses" AS DOUBLE) / 100)', 0)}
+                 THEN {jround('abs(diff * try_cast("Total Responses" AS DOUBLE) / 100)', 0, 12)}
             END AS arn0
   FROM s6
 )
 SELECT "Demographic", "Category", "# of Survey Responses",
-       {_jround('survey_pct', 1)} || '%' AS "% of Survey Responses",
+       {jround('survey_pct', 1, 12)} || '%' AS "% of Survey Responses",
        "Total Responses",
-       {_jround('census_pct', 1)} || '%' AS "% of Population (Census)",
-       {_jround('diff', 1)} || '%' AS "% Difference",
+       {jround('census_pct', 1, 12)} || '%' AS "% of Population (Census)",
+       {jround('diff', 1, 12)} || '%' AS "% Difference",
        "Representation Status",
-       {_jround(_jround("arn0 / 10", 0) + " * 10", 0)} AS "Additional Responses Needed",
+       {jround(jround("arn0 / 10", 0, 12) + " * 10", 0, 12)} AS "Additional Responses Needed",
        strftime(maxd, '%m/%d/%Y') AS "Data Last Updated"
 FROM s7, md
 """
+
+
+_S2_NOTE = """  -- two-sided key consolidation (merge_census.py:38-39,49-54); the :60-68
+  -- re-fill is dead after it (condition references coalesced keys) and the
+  -- engine mirrors that, so it is omitted here
+"""
+
+_CENSUS_ORACLE = f"""
+WITH cust_n AS (
+  SELECT n_name FROM customer JOIN nation ON c_nationkey = n_nationkey
+  WHERE c_nationkey < 20
+), g AS (
+  SELECT n_name AS cat, COUNT(*) AS cnt FROM cust_n GROUP BY 1
+), t AS (
+  SELECT g.*, SUM(CASE WHEN cat <> 'Unknown' THEN cnt END) OVER () AS total_excl FROM g
+), rollup AS (
+  SELECT 'Nation' AS rd, cat AS rc,
+         cnt AS n_resp,
+         printf('%.2f%%', {jround('cnt * 100.0 / total_excl', 2, 12)}) AS pct_resp,
+         CASE WHEN cat <> 'Unknown' THEN CAST(total_excl AS VARCHAR) ELSE '' END AS total_resp
+  FROM t
+), sc AS (
+  SELECT n_name, n_nationkey, n_regionkey, COUNT(*) AS scnt
+  FROM supplier JOIN nation ON s_nationkey = n_nationkey
+  WHERE n_nationkey >= 5
+  GROUP BY 1, 2, 3
+), census AS (
+  SELECT 'Nation' AS cd, n_name AS cc,
+         printf('%.1f%%', {jround('scnt * 100.0 / SUM(scnt) OVER ()', 1, 12)}) AS census_pct_str,
+         CASE WHEN n_regionkey = 2 THEN NULL ELSE n_nationkey END AS display_order
+  FROM sc
+), j AS (
+  SELECT * FROM census FULL OUTER JOIN rollup ON cd = rd AND cc = rc
+), md AS (SELECT max(o_orderdate) AS maxd FROM orders),
+{_merged_select(_S2_NOTE)}"""
 
 
 @query("census_merge", oracle=_CENSUS_ORACLE)
@@ -1016,7 +1023,7 @@ WITH resp AS (
   FROM g
 ), rollup AS (
   SELECT demo AS rd, cat AS rc, cnt AS n_resp,
-         printf('%.2f%%', {_jround('cnt * 100.0 / total_excl', 2)}) AS pct_resp,
+         printf('%.2f%%', {jround('cnt * 100.0 / total_excl', 2, 12)}) AS pct_resp,
          CASE WHEN cat <> 'Unknown' THEN CAST(total_excl AS VARCHAR) ELSE '' END AS total_resp
   FROM t
 ), census AS (
@@ -1033,52 +1040,7 @@ WITH resp AS (
 ), j AS (
   SELECT * FROM census FULL OUTER JOIN rollup ON cd = rd AND cc = rc
 ), md AS (SELECT max(submitted) AS maxd FROM resp),
-s1 AS (
-  SELECT cd, cc, census_pct_str, display_order, rd, rc,
-    CASE WHEN rd IS NULL AND rc IS NULL
-         THEN first_value(total_resp IGNORE NULLS) OVER (
-              PARTITION BY cd ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         ELSE total_resp END AS total_resp,
-    CASE WHEN rd IS NULL AND rc IS NULL THEN 0 ELSE n_resp END AS n_resp,
-    CASE WHEN rd IS NULL AND rc IS NULL THEN '0' ELSE pct_resp END AS pct_resp
-  FROM j
-), s2 AS (
-  SELECT total_resp, n_resp, pct_resp, display_order,
-    CASE WHEN cd IS NULL AND cc IS NULL THEN NULL ELSE census_pct_str END AS census_pct_str,
-    COALESCE(cd, rd) AS "Demographic", COALESCE(cc, rc) AS "Category"
-  FROM s1
-), s4 AS (
-  SELECT "Demographic", "Category", n_resp AS "# of Survey Responses",
-         total_resp AS "Total Responses", display_order,
-         try_cast(regexp_replace(census_pct_str, '%', '', 'g') AS DOUBLE) AS census_pct,
-         try_cast(regexp_replace(pct_resp, '%', '', 'g') AS DOUBLE) AS survey_pct
-  FROM s2
-), s5 AS (
-  SELECT *, CASE WHEN census_pct IS NOT NULL AND survey_pct IS NOT NULL
-                 THEN survey_pct - census_pct END AS diff
-  FROM s4
-), s6 AS (
-  SELECT *,
-    CASE WHEN diff < -5 THEN 'Under-Represented'
-         WHEN diff > 5 THEN 'Over-Represented'
-         WHEN diff > -5 AND diff < 5 THEN 'Looks Good' END AS "Representation Status"
-  FROM s5
-), s7 AS (
-  SELECT *, CASE WHEN "Representation Status" IN ('Under-Represented', 'Over-Represented')
-                 THEN {_jround('abs(diff * try_cast("Total Responses" AS DOUBLE) / 100)', 0)}
-            END AS arn0
-  FROM s6
-)
-SELECT "Demographic", "Category", "# of Survey Responses",
-       {_jround('survey_pct', 1)} || '%' AS "% of Survey Responses",
-       "Total Responses",
-       {_jround('census_pct', 1)} || '%' AS "% of Population (Census)",
-       {_jround('diff', 1)} || '%' AS "% Difference",
-       "Representation Status",
-       {_jround(_jround("arn0 / 10", 0) + " * 10", 0)} AS "Additional Responses Needed",
-       strftime(maxd, '%m/%d/%Y') AS "Data Last Updated"
-FROM s7, md
-"""
+{_merged_select()}"""
 
 
 @query("survey_pipeline", oracle=_SURVEY_PIPE_ORACLE)

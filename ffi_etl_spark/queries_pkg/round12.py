@@ -16,7 +16,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import (
+    AUTOK_BITS,
+    AUTOK_CELLS,
+    AUTOK_ROUNDS,
+    FRACPROBE,
+    FRACPROBE_RK,
+    ivf_model_cte,
+    nearest_cells_cte,
+    sq_codes_cte,
+)
 
 _PQ_SLICE = 500
 _PQ_DIM = 64
@@ -27,22 +37,21 @@ _PQ_QMOD = 25    # 20 probe vectors
 _PQ_K = 10
 
 
-def _pq_adc_oracle(tail: str | None = None) -> str:
-    """Replay the exact PQ program: SQ codes over the slice, m
-    per-subspace Lloyd chains (floored fixed-point means, integer L2
-    argmin with ties to the lower cid), the probe LUT against the
-    final codebooks, and the ADC sum — every value a BIGINT. ``tail``
-    (the re-rank gate) continues past the ADC ranking; None closes
-    with the ADC top-k select."""
+def _pq_train_cte(prefix: str = "") -> str:
+    """(sub, {prefix}a0, {prefix}c1, {prefix}a1, ...): the SQ codes split
+    into subspaces and the per-subspace Lloyd chains over them —
+    floored fixed-point means, integer L2 argmin with ties to the
+    lower cid. ``prefix`` keeps the chain's names apart from another
+    Lloyd chain in the same WITH clause."""
     d_sub = _PQ_DIM // _PQ_M
     steps = []
-    prev = "a0"
+    prev = f"{prefix}a0"
     for r in range(1, _PQ_ROUNDS + 1):
-        steps.append(f"""c{r} AS (
+        steps.append(f"""{prefix}c{r} AS (
   SELECT j, cid, p, CAST(FLOOR(SUM(code) * 1024.0 / COUNT(*)) AS BIGINT) AS cent
   FROM sub JOIN {prev} USING (vec_id, j)
   GROUP BY j, cid, p
-), a{r} AS (
+), {prefix}a{r} AS (
   SELECT vec_id, j, cid FROM (
     SELECT vec_id, j, cid,
            ROW_NUMBER() OVER (PARTITION BY vec_id, j
@@ -50,13 +59,29 @@ def _pq_adc_oracle(tail: str | None = None) -> str:
     FROM (
       SELECT s.vec_id, s.j, c.cid,
              SUM((s.code * 1024 - c.cent) * (s.code * 1024 - c.cent)) AS d2
-      FROM sub s JOIN c{r} c ON c.j = s.j AND c.p = s.p
+      FROM sub s JOIN {prefix}c{r} c ON c.j = s.j AND c.p = s.p
       GROUP BY s.vec_id, s.j, c.cid
     )
   ) WHERE rk = 1
 )""")
-        prev = f"a{r}"
+        prev = f"{prefix}a{r}"
     chain = ",\n".join(steps)
+    return f"""sub AS (
+  SELECT vec_id, CAST((i - 1) // {d_sub} AS INT) AS j,
+         (i - 1) % {d_sub} AS p, code
+  FROM codes
+), {prefix}a0 AS (
+  SELECT DISTINCT vec_id, j, CAST(vec_id % {_PQ_KSUB} AS INT) AS cid FROM sub
+),
+{chain}"""
+
+
+def _pq_adc_oracle(tail: str | None = None) -> str:
+    """Replay the exact PQ program: SQ codes over the slice, m
+    per-subspace Lloyd chains, the probe LUT against the final
+    codebooks, and the ADC sum — every value a BIGINT. ``tail`` (the
+    re-rank gate) continues past the ADC ranking; None closes with the
+    ADC top-k select."""
     if tail is None:
         tail = f"""
 SELECT query_id, neighbor_id, adc_d2, rank::INT AS rank
@@ -65,25 +90,7 @@ FROM ranked WHERE rank <= {_PQ_K}"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
   WHERE vec_id < {_PQ_SLICE}
-), dimstats AS (
-  SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-  FROM e CROSS JOIN (SELECT unnest(generate_series(1, {_PQ_DIM})) AS i)
-  GROUP BY i
-), codes AS (
-  SELECT e.vec_id, d.i,
-         CASE WHEN d.mx = d.mn THEN 0
-              ELSE GREATEST(0, LEAST(255,
-                CAST(FLOOR((e.v[d.i] - d.mn) * 255.0 / (d.mx - d.mn)) AS BIGINT)))
-         END AS code
-  FROM e CROSS JOIN dimstats d
-), sub AS (
-  SELECT vec_id, CAST((i - 1) // {d_sub} AS INT) AS j,
-         (i - 1) % {d_sub} AS p, code
-  FROM codes
-), a0 AS (
-  SELECT DISTINCT vec_id, j, CAST(vec_id % {_PQ_KSUB} AS INT) AS cid FROM sub
-),
-{chain},
+), {sq_codes_cte(dim=_PQ_DIM)}, {_pq_train_cte()},
 lut AS (
   SELECT s.vec_id AS qid, s.j, c.cid,
          SUM((s.code * 1024 - c.cent) * (s.code * 1024 - c.cent)) AS d2
@@ -208,88 +215,10 @@ def _pq_adc_rerank(spark, sf_dir):
 
 
 def _ivfpq_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
-    from ffi_etl_spark.queries_pkg.round7 import (
-        _AUTOK_BITS,
-        _AUTOK_CELLS,
-        _AUTOK_ROUNDS,
-        _FRACPROBE_RK,
-    )
-
-    d_sub = _PQ_DIM // _PQ_M
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_PQ_SLICE})"
-    cos_ec = _COS.format(a="e.v", b="c.centroid")
-    # PQ chain with p-prefixed names (pa0/pc1/pa1/...)
-    steps = []
-    prev = "pa0"
-    for r in range(1, _PQ_ROUNDS + 1):
-        steps.append(f"""pc{r} AS (
-  SELECT j, cid, p, CAST(FLOOR(SUM(code) * 1024.0 / COUNT(*)) AS BIGINT) AS cent
-  FROM sub JOIN {prev} USING (vec_id, j)
-  GROUP BY j, cid, p
-), pa{r} AS (
-  SELECT vec_id, j, cid FROM (
-    SELECT vec_id, j, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                              ORDER BY d2 ASC, cid ASC) AS rk
-    FROM (
-      SELECT s.vec_id, s.j, c.cid,
-             SUM((s.code * 1024 - c.cent) * (s.code * 1024 - c.cent)) AS d2
-      FROM sub s JOIN pc{r} c ON c.j = s.j AND c.p = s.p
-      GROUP BY s.vec_id, s.j, c.cid
-    )
-  ) WHERE rk = 1
-)""")
-        prev = f"pa{r}"
-    pq_chain = ",\n".join(steps)
+    ca = nearest_cells_cte("ca", ("vec_id AS neighbor_id",))
+    qa = nearest_cells_cte("qa", ("vec_id AS query_id",), mod=_PQ_QMOD, rk=FRACPROBE_RK)
     return f"""
-WITH {_kmeans_det_cte(_AUTOK_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), ca AS (
-  SELECT vec_id AS neighbor_id, centroid_id FROM (
-    SELECT e.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-  ) WHERE rk = 1
-), qa AS (
-  SELECT vec_id AS query_id, centroid_id FROM (
-    SELECT e.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-    WHERE e.vec_id % {_PQ_QMOD} = 0
-  ) WHERE rk <= {_FRACPROBE_RK}
-), dimstats AS (
-  SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-  FROM e CROSS JOIN (SELECT unnest(generate_series(1, {_PQ_DIM})) AS i)
-  GROUP BY i
-), codes AS (
-  SELECT e.vec_id, d.i,
-         CASE WHEN d.mx = d.mn THEN 0
-              ELSE GREATEST(0, LEAST(255,
-                CAST(FLOOR((e.v[d.i] - d.mn) * 255.0 / (d.mx - d.mn)) AS BIGINT)))
-         END AS code
-  FROM e CROSS JOIN dimstats d
-), sub AS (
-  SELECT vec_id, CAST((i - 1) // {d_sub} AS INT) AS j,
-         (i - 1) % {d_sub} AS p, code
-  FROM codes
-), pa0 AS (
-  SELECT DISTINCT vec_id, j, CAST(vec_id % {_PQ_KSUB} AS INT) AS cid FROM sub
-),
-{pq_chain},
+WITH {ivf_model_cte(AUTOK_CELLS, _PQ_SLICE)}, {ca}, {qa}, {sq_codes_cte(dim=_PQ_DIM)}, {_pq_train_cte("p")},
 plut AS (
   SELECT s.vec_id AS qid, s.j, s.code * 1024 - c.cent AS delta, c.cid
   FROM sub s JOIN pc{_PQ_ROUNDS} c ON c.j = s.j AND c.p = s.p
@@ -310,24 +239,7 @@ plut AS (
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY adc_d2 ASC, neighbor_id ASC) AS rank
   FROM scored
-), short AS (
-  SELECT query_id, neighbor_id FROM ranked WHERE rank <= {_PQ_RERANK * _PQ_K}
-), rr AS (
-  SELECT s.query_id, s.neighbor_id,
-         CAST(SUM((cq.code - cn.code) * (cq.code - cn.code)) AS BIGINT)
-           AS code_d2
-  FROM short s
-  JOIN codes cn ON cn.vec_id = s.neighbor_id
-  JOIN codes cq ON cq.vec_id = s.query_id AND cq.i = cn.i
-  GROUP BY s.query_id, s.neighbor_id
-), rranked AS (
-  SELECT query_id, neighbor_id, code_d2,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY code_d2 ASC, neighbor_id ASC) AS rank
-  FROM rr
-)
-SELECT query_id, neighbor_id, code_d2, rank::INT AS rank
-FROM rranked WHERE rank <= {_PQ_K}
+){_pq_rerank_tail()}
 """
 
 
@@ -349,15 +261,10 @@ def _ann_ivfpq_topk(spark, sf_dir):
         quantize_codes_long,
     )
     from ffi_etl_spark.operators.similarity import ivf_index_tables
-    from ffi_etl_spark.queries_pkg.round7 import (
-        _AUTOK_BITS,
-        _AUTOK_ROUNDS,
-        _FRACPROBE,
-    )
 
     emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _PQ_SLICE)
     centroids, assignments = ivf_index_tables(
-        emb, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
+        emb, n_iter=AUTOK_ROUNDS, quantize_bits=AUTOK_BITS
     )
     codes = quantize_codes_long(emb).localCheckpoint(eager=True)
     codebooks, encoded = pq_train_encode(
@@ -366,7 +273,7 @@ def _ann_ivfpq_topk(spark, sf_dir):
     probes = list(range(0, _PQ_SLICE, _PQ_QMOD))
     return ann_ivfpq_topk(
         centroids, assignments, codebooks, encoded, codes, probes,
-        k=_PQ_K, probe_frac=_FRACPROBE, rerank_factor=_PQ_RERANK,
+        k=_PQ_K, probe_frac=FRACPROBE, rerank_factor=_PQ_RERANK,
         dim=_PQ_DIM, m=_PQ_M,
     ).select(
         F.col("pid").alias("query_id"),

@@ -17,57 +17,20 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
-from ffi_etl_spark.queries_pkg.extensions import _minhash_pairs_cte
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import (
+    BM25_TERMS,
+    INT8_CODES_CTE,
+    bm25_cte,
+    minhash_pairs_cte,
+)
 
 # ---------------------------------------------------------------------------
 # BM25 ranked retrieval
 # ---------------------------------------------------------------------------
 
-_BM25_TERMS = ("hash", "spark", "window")
-
-
-def _bm25_cte(terms: tuple[str, ...] = _BM25_TERMS) -> str:
-    """The BM25 scoring pipeline as a WITH-body ending in ``piv``
-    (doc_id, score) — mirrors operators/textops.py::bm25_rank term by
-    term (rational idf, exact-integer avgdl, sorted-term-order score
-    sum). Shared by the bm25_rank gate and round-5's RRF fusion gate."""
-    in_list = ", ".join(f"'{t}'" for t in sorted(terms))
-    pieces = "\n         + ".join(
-        f"COALESCE(MAX(CASE WHEN term = '{t}' THEN s END), 0.0)"
-        for t in sorted(terms)
-    )
-    return rf"""toks AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
-  FROM documents
-), dl AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id
-), corpus AS (
-  SELECT CAST(SUM(dl) AS BIGINT) AS sum_dl, CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM dl
-), tf AS (
-  SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM toks WHERE term IN ({in_list})
-  GROUP BY doc_id, term
-), dfreq AS (
-  SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term
-), scored AS (
-  SELECT t.doc_id, t.term,
-         ((c.n_docs - d.df + 0.5) / (d.df + 0.5))
-           * ((t.tf * (1.2 + 1.0))
-              / (t.tf + 1.2 * ((1.0 - 0.75)
-                               + (0.75 * l.dl) / (CAST(c.sum_dl AS DOUBLE) / c.n_docs))))
-           AS s
-  FROM tf t JOIN dfreq d USING (term) JOIN dl l USING (doc_id) CROSS JOIN corpus c
-), piv AS (
-  SELECT doc_id,
-         {pieces} AS score
-  FROM scored GROUP BY doc_id
-)"""
-
-
 _BM25_ORACLE = f"""
-WITH {_bm25_cte()}
+WITH {bm25_cte()}
 SELECT doc_id, printf('%.6f', score) AS score_s
 FROM piv ORDER BY score DESC, doc_id LIMIT 20
 """
@@ -81,7 +44,7 @@ def _bm25_rank(spark, sf_dir):
     bit-identical cross-engine; the score leaves as a %.6f string."""
     from ffi_etl_spark.operators.textops import bm25_rank
 
-    ranked = bm25_rank(table(spark, sf_dir, "documents"), list(_BM25_TERMS))
+    ranked = bm25_rank(table(spark, sf_dir, "documents"), list(BM25_TERMS))
     return ranked.select(
         "doc_id", F.format_string("%.6f", F.col("score")).alias("score_s")
     )
@@ -92,7 +55,7 @@ def _bm25_rank(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _SURVIVORS_ORACLE = f"""
-WITH RECURSIVE {_minhash_pairs_cte()}, edges AS (
+WITH RECURSIVE {minhash_pairs_cte()}, edges AS (
   SELECT id_a AS a, id_b AS b FROM verified WHERE jaccard_sim >= 0.5
   UNION ALL
   SELECT id_b, id_a FROM verified WHERE jaccard_sim >= 0.5
@@ -140,20 +103,8 @@ def _dedup_survivors(spark, sf_dir):
 # Embedding int8 scalar quantization
 # ---------------------------------------------------------------------------
 
-_QUANTIZE_ORACLE = """
-WITH ex AS (
-  SELECT vec_id,
-         unnest(embedding::DOUBLE[]) AS x,
-         unnest(range(0, len(embedding))) AS dim
-  FROM embeddings
-), stats AS (
-  SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM ex GROUP BY dim
-), codes AS (
-  SELECT vec_id, dim,
-         CASE WHEN mx = mn THEN 0
-              ELSE CAST(floor(((x - mn) * 255.0) / (mx - mn)) AS INT) END AS code
-  FROM ex JOIN stats USING (dim)
-)
+_QUANTIZE_ORACLE = f"""
+WITH {INT8_CODES_CTE}
 SELECT vec_id, CAST(COUNT(*) AS BIGINT) AS n_dims,
        string_agg(CAST(code AS VARCHAR), ',' ORDER BY dim) AS codes_csv
 FROM codes GROUP BY vec_id ORDER BY vec_id LIMIT 100
@@ -750,7 +701,7 @@ def _lm_transition_anomaly(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _CLUSTER_PROFILE_ORACLE = f"""
-WITH RECURSIVE {_minhash_pairs_cte()}, edges AS (
+WITH RECURSIVE {minhash_pairs_cte()}, edges AS (
   SELECT id_a AS a, id_b AS b FROM verified WHERE jaccard_sim >= 0.5
   UNION ALL
   SELECT id_b, id_a FROM verified WHERE jaccard_sim >= 0.5
@@ -798,20 +749,8 @@ def _dedup_cluster_profile(spark, sf_dir):
 # kNN in quantized code space
 # ---------------------------------------------------------------------------
 
-_KNN_CODES_ORACLE = """
-WITH ex AS (
-  SELECT vec_id,
-         unnest(embedding::DOUBLE[]) AS x,
-         unnest(range(0, len(embedding))) AS dim
-  FROM embeddings
-), stats AS (
-  SELECT dim, MIN(x) AS mn, MAX(x) AS mx FROM ex GROUP BY dim
-), codes AS (
-  SELECT vec_id, dim,
-         CASE WHEN mx = mn THEN 0
-              ELSE CAST(floor(((x - mn) * 255.0) / (mx - mn)) AS INT) END AS code
-  FROM ex JOIN stats USING (dim)
-), probes AS (
+_KNN_CODES_ORACLE = f"""
+WITH {INT8_CODES_CTE}, probes AS (
   SELECT vec_id AS pid, dim, code AS pcode FROM codes WHERE vec_id IN (0, 1, 2)
 ), dists AS (
   SELECT p.pid, c.vec_id,
@@ -878,7 +817,7 @@ def _label_propagation_oracle(n_iter: int = _LP_ROUNDS) -> str:
 )""")
     chain = ",\n".join(steps)
     return f"""
-WITH {_minhash_pairs_cte()}, lp_pairs AS (
+WITH {minhash_pairs_cte()}, lp_pairs AS (
   SELECT id_a, id_b FROM verified WHERE jaccard_sim >= 0.5
 ), edges AS (
   SELECT DISTINCT a, b FROM (

@@ -22,14 +22,15 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
+from ffi_etl_spark.functions.hashing import md5_int32
 from ffi_etl_spark.functions.textstats import (
     ENGLISH_STOPWORDS,
     LANG_MARKERS,
     stopword_ratio,
     ws_token_count,
 )
-from ffi_etl_spark.queries import query
-from ffi_etl_spark.queries_pkg.datamix import _md5_key
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import jround, kmeans_det_cte
 
 _WS_TOK_SQL = r"CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)"
 _DRAW_SQL = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
@@ -90,7 +91,7 @@ def _token_budget_mixture(spark, sf_dir):
     )
     mn = counts.agg(F.min("tok_total").alias("min_tok"))
     keep = (
-        _md5_key(F.col("doc_id")).cast("decimal(38,0)") * F.col("tok_total")
+        md5_int32(F.col("doc_id").cast("string")).cast("decimal(38,0)") * F.col("tok_total")
         < F.col("min_tok").cast("decimal(38,0)") * F.lit(4294967296)
     )
     kept = (
@@ -177,7 +178,7 @@ def _padding_efficiency(spark, sf_dir):
     base = d.select(
         "doc_id",
         ws_token_count(F.col("text")).cast("long").alias("n_tok"),
-        _md5_key(F.col("doc_id")).alias("draw"),
+        md5_int32(F.col("doc_id").cast("string")).alias("draw"),
     ).withColumn("shard", F.col("draw") % _PAD_SHARDS)
 
     def batched(order_cols):
@@ -711,7 +712,7 @@ def _split_leakage_audit(spark, sf_dir):
     from ffi_etl_spark.functions.hashing import md5_int60, word_ngrams
 
     docs = table(spark, sf_dir, "documents")
-    bucket = _md5_key(F.col("doc_id")) % 10
+    bucket = md5_int32(F.col("doc_id").cast("string")) % 10
     split = (
         F.when(bucket < 8, "train").when(bucket == 8, "val").otherwise("test")
     )
@@ -928,7 +929,7 @@ def _mixture_curriculum(spark, sf_dir):
         2: F.floor(F.sqrt(r) * F.lit(4294967296.0)).cast("long"),
         3: F.floor(r * F.lit(4294967296.0)).cast("long"),
     }
-    draw = _md5_key(F.col("doc_id"))
+    draw = md5_int32(F.col("doc_id").cast("string"))
     kept = (
         d.join(F.broadcast(counts), "source")
         .join(F.broadcast(mn))
@@ -961,17 +962,15 @@ _SEMDEDUP_K, _SEMDEDUP_ROUNDS = 8, 3
 
 
 def _dedup_semantic_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _jround, _kmeans_det_cte
-
     cos = "list_dot_product(a.v, b.v) / (a.vn * b.vn)"
     return f"""
-WITH {_kmeans_det_cte(_SEMDEDUP_K, _SEMDEDUP_ROUNDS)},
+WITH {kmeans_det_cte(_SEMDEDUP_K, _SEMDEDUP_ROUNDS)},
 fin AS (
   SELECT vec_id, v, centroid_id, sqrt(list_dot_product(v, v)) AS vn
   FROM a{_SEMDEDUP_ROUNDS}
 )
 SELECT a.centroid_id, a.vec_id AS id_a, b.vec_id AS id_b,
-       {_jround(cos, 6)} AS cosine_sim
+       {jround(cos, 6)} AS cosine_sim
 FROM fin a JOIN fin b
   ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
 WHERE a.vn > 0 AND b.vn > 0 AND {cos} >= 0.15

@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import minhash_pairs_cte
 
 # ---------------------------------------------------------------------------
 # incremental view maintenance: base aggregate + delta batch, no rescan
@@ -448,10 +449,8 @@ def _kmv_set_algebra(spark, sf_dir):
 
 
 def _clustering_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _minhash_pairs_cte
-
     return f"""
-WITH {_minhash_pairs_cte()}, cc_pairs AS (
+WITH {minhash_pairs_cte()}, cc_pairs AS (
   SELECT id_a, id_b FROM verified WHERE jaccard_sim >= 0.5
 ), edges AS (
   SELECT id_a AS a, id_b AS b FROM cc_pairs

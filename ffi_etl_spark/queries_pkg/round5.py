@@ -15,11 +15,19 @@ from pyspark.sql import functions as F  # noqa: F401  (registration idiom parity
 
 from ffi_etl_spark.catalog import table
 from ffi_etl_spark.operators.textops import _SPAN_POS_BITS, scrub_dup_spans
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import BM25_TERMS, COS, DSIR_ORACLE, bm25_cte
 
 _SPAN_N = 8
 
-_SPAN_SCRUB_ORACLE = rf"""
+
+def _span_scrub_oracle(elect: str) -> str:
+    """The span-scrub replay around ``elect``, the CTEs that pick the
+    occurrences to drop as ``scrub`` = (doc_id, s, n_tokens) from
+    ``hashed`` = (doc_id, n_tokens, s, g): tokenize, hash every
+    _SPAN_N-token span, drop the covered tokens of the elected
+    occurrences, rebuild and summarize each document."""
+    return rf"""
 WITH toked AS (
   SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
 ), base AS (
@@ -32,15 +40,7 @@ WITH toked AS (
   SELECT o.doc_id, o.n_tokens, o.s,
          ('0x' || substr(md5(array_to_string(b.toks[o.s:o.s + {_SPAN_N - 1}], ' ')), 1, 15))::BIGINT AS g
   FROM occ o JOIN base b ON b.doc_id = o.doc_id
-), stats AS (
-  SELECT g, COUNT(DISTINCT doc_id) AS ddf,
-         MIN(doc_id * {1 << _SPAN_POS_BITS} + s) AS canon
-  FROM hashed GROUP BY g
-), scrub AS (
-  SELECT h.doc_id, h.s, h.n_tokens
-  FROM hashed h JOIN stats t ON t.g = h.g
-  WHERE t.ddf >= 2 AND h.doc_id * {1 << _SPAN_POS_BITS} + h.s <> t.canon
-), covered AS (
+), {elect}, covered AS (
   SELECT DISTINCT doc_id,
          unnest(generate_series(s, least(s + {_SPAN_N - 1}, n_tokens))) AS ti
   FROM scrub
@@ -69,6 +69,17 @@ LEFT JOIN removed r ON r.doc_id = b.doc_id
 """
 
 
+_SPAN_SCRUB_ORACLE = _span_scrub_oracle(rf"""stats AS (
+  SELECT g, COUNT(DISTINCT doc_id) AS ddf,
+         MIN(doc_id * {1 << _SPAN_POS_BITS} + s) AS canon
+  FROM hashed GROUP BY g
+), scrub AS (
+  SELECT h.doc_id, h.s, h.n_tokens
+  FROM hashed h JOIN stats t ON t.g = h.g
+  WHERE t.ddf >= 2 AND h.doc_id * {1 << _SPAN_POS_BITS} + h.s <> t.canon
+)""")
+
+
 @query("dedup_span_scrub", oracle=_SPAN_SCRUB_ORACLE)
 def _dedup_span_scrub(spark, sf_dir):
     """operators/textops.py::scrub_dup_spans over documents — the whole
@@ -93,18 +104,15 @@ _RRF_DEPTH, _RRF_K, _RRF_TOPK, _RRF_QUERY_VEC = 50, 60, 20, 0
 
 
 def _rrf_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _COS
-    from ffi_etl_spark.queries_pkg.round4 import _bm25_cte
-
     return f"""
-WITH {_bm25_cte()},
+WITH {bm25_cte()},
 lex AS (
   SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank_0
   FROM piv ORDER BY score DESC, doc_id LIMIT {_RRF_DEPTH}
 ), q AS (
   SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {_RRF_QUERY_VEC}
 ), semscored AS (
-  SELECT e.vec_id AS doc_id, {_COS.format(a='q.qv', b='e.v')} AS cs
+  SELECT e.vec_id AS doc_id, {COS.format(a='q.qv', b='e.v')} AS cs
   FROM (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings) e CROSS JOIN q
   WHERE e.vec_id <> {_RRF_QUERY_VEC}
 ), sem AS (
@@ -138,13 +146,12 @@ def _hybrid_rrf_fusion(spark, sf_dir):
 
     from ffi_etl_spark.operators.similarity import knn_bruteforce
     from ffi_etl_spark.operators.textops import bm25_rank, rrf_fuse
-    from ffi_etl_spark.queries_pkg.round4 import _BM25_TERMS
 
     docs = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings")
     # lexical: the top-50 frame is already reduced (TakeOrdered), so
     # the rank window runs over 50 rows, not the corpus
-    lex = bm25_rank(docs, list(_BM25_TERMS), k=_RRF_DEPTH).withColumn(
+    lex = bm25_rank(docs, list(BM25_TERMS), k=_RRF_DEPTH).withColumn(
         "rank",
         F.row_number().over(
             Window.orderBy(F.col("score").desc(), F.col("doc_id"))
@@ -173,43 +180,7 @@ def _hybrid_rrf_fusion(spark, sf_dir):
 # DSIR importance weights: hashed-bigram LLR vs a target domain sample
 # ---------------------------------------------------------------------------
 
-_DSIR_B, _DSIR_BITS = 64, 20
-
-_DSIR_ORACLE = rf"""
-WITH toked AS (
-  SELECT doc_id, lang, string_split_regex(trim(text), '\s+') AS toks FROM documents
-), occ AS (
-  SELECT doc_id, lang, toks,
-         unnest(generate_series(1, greatest(len(toks) - 1, 1))) AS i
-  FROM toked
-), grams AS (
-  SELECT doc_id, (lang = 'en') AS t,
-         ('0x' || substr(md5(array_to_string(toks[i:i+1], ' ')), 1, 8))::BIGINT % {_DSIR_B} AS b
-  FROM occ
-), stats AS (
-  SELECT b, CAST(COUNT(*) AS BIGINT) AS s_b,
-         CAST(COUNT(*) FILTER (WHERE t) AS BIGINT) AS t_b
-  FROM grams GROUP BY b
-), tot AS (
-  SELECT CAST(SUM(s_b) AS BIGINT) AS S, CAST(SUM(t_b) AS BIGINT) AS T FROM stats
-), llr AS (
-  SELECT b,
-         CAST(FLOOR({1 << _DSIR_BITS}.0 * (
-           ln(CAST(t_b + 1 AS DOUBLE) / (T + {_DSIR_B}))
-           - ln(CAST(s_b + 1 AS DOUBLE) / (S + {_DSIR_B}))
-         )) AS BIGINT) AS llr_q
-  FROM stats CROSS JOIN tot
-), dbc AS (
-  SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS c FROM grams GROUP BY doc_id, b
-)
-SELECT d.doc_id, CAST(SUM(d.c) AS BIGINT) AS n_grams,
-       CAST(SUM(d.c * l.llr_q) AS BIGINT) AS weight_q
-FROM dbc d JOIN llr l USING (b)
-GROUP BY d.doc_id
-"""
-
-
-@query("dsir_importance", oracle=_DSIR_ORACLE)
+@query("dsir_importance", oracle=DSIR_ORACLE)
 def _dsir_importance(spark, sf_dir):
     """operators/textops.py::dsir_importance over documents with the
     English subset as the target domain sample. The gate hashes only
@@ -294,52 +265,13 @@ def _woe_iv_encoding(spark, sf_dir):
 # Within-doc repeated-span scrub (the removal step for repetition_filter)
 # ---------------------------------------------------------------------------
 
-_REP_SCRUB_ORACLE = rf"""
-WITH toked AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-), base AS (
-  SELECT doc_id, toks, len(toks) AS n_tokens FROM toked
-), occ AS (
-  SELECT doc_id, n_tokens,
-         unnest(generate_series(1, greatest(n_tokens - {_SPAN_N - 1}, 1))) AS s
-  FROM base
-), hashed AS (
-  SELECT o.doc_id, o.n_tokens, o.s,
-         ('0x' || substr(md5(array_to_string(b.toks[o.s:o.s + {_SPAN_N - 1}], ' ')), 1, 15))::BIGINT AS g
-  FROM occ o JOIN base b ON b.doc_id = o.doc_id
-), firsts AS (
+_REP_SCRUB_ORACLE = _span_scrub_oracle("""firsts AS (
   SELECT doc_id, g, MIN(s) AS first_s FROM hashed GROUP BY doc_id, g
 ), scrub AS (
   SELECT h.doc_id, h.s, h.n_tokens
   FROM hashed h JOIN firsts f ON f.doc_id = h.doc_id AND f.g = h.g
   WHERE h.s > f.first_s
-), covered AS (
-  SELECT DISTINCT doc_id,
-         unnest(generate_series(s, least(s + {_SPAN_N - 1}, n_tokens))) AS ti
-  FROM scrub
-), toks_pos AS (
-  SELECT doc_id, unnest(generate_series(1, n_tokens)) AS ti FROM base
-), kept AS (
-  SELECT tp.doc_id, tp.ti
-  FROM toks_pos tp
-  WHERE NOT EXISTS (
-    SELECT 1 FROM covered c WHERE c.doc_id = tp.doc_id AND c.ti = tp.ti
-  )
-), rebuilt AS (
-  SELECT k.doc_id, string_agg(b.toks[k.ti], ' ' ORDER BY k.ti) AS scrubbed
-  FROM kept k JOIN base b ON b.doc_id = k.doc_id
-  GROUP BY k.doc_id
-), removed AS (
-  SELECT doc_id, COUNT(*) AS nrem FROM covered GROUP BY doc_id
-)
-SELECT b.doc_id,
-       CAST(b.n_tokens AS INT) AS n_tokens,
-       CAST(COALESCE(r.nrem, 0) AS INT) AS n_removed,
-       md5(COALESCE(rb.scrubbed, '')) AS scrubbed_md5
-FROM base b
-LEFT JOIN rebuilt rb ON rb.doc_id = b.doc_id
-LEFT JOIN removed r ON r.doc_id = b.doc_id
-"""
+)""")
 
 
 @query("repetition_span_scrub", oracle=_REP_SCRUB_ORACLE)
@@ -365,7 +297,7 @@ _BPE_MERGES, _BPE_CAP = 8, 5000
 
 def _bpe_oracle(n_merges: int = _BPE_MERGES, cap: int = _BPE_CAP) -> str:
     """Unrolled fixed-round BPE training as a DuckDB CTE chain — the
-    _kmeans_det_cte recipe with NO floats at all (pair counts are
+    oracle_sql.kmeans_det_cte recipe with NO floats at all (pair counts are
     exact integers, the argmax tie-breaks lexicographically, strings
     compare bytewise UTF-8 on both engines). The greedy left-to-right
     merge application is replayed with the even-offset parity rule:

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import CONFUSION_REPORT_SQL
 
 # The oracle recomputes the whole lifecycle in SQL: Gini stump on the
 # even-event_id split (the round-5b _STUMP_ORACLE shape), probability
@@ -27,7 +28,7 @@ from ffi_etl_spark.queries import query
 # reshape (the round-5b _report_oracle shape). Every count is a
 # BIGINT; every double is one correctly-rounded division of exact
 # integers, so the report hashes bit-strictly.
-_LIFECYCLE_ORACLE = """
+_LIFECYCLE_ORACLE = f"""
 WITH binned AS (
   SELECT event_id,
          CAST(LEAST(99, GREATEST(0, FLOOR(value))) AS BIGINT) AS bin,
@@ -68,34 +69,7 @@ WITH binned AS (
          CAST((CASE WHEN h.bin <= b.t THEN b.p_left ELSE b.p_right END) > 0.5
               AS BIGINT) AS p
   FROM holdout h CROSS JOIN best b
-), pairs AS (
-  SELECT y, p, CAST(COUNT(*) AS BIGINT) AS n FROM scored GROUP BY y, p
-), by_true AS (
-  SELECT y AS cls, CAST(SUM(n) AS BIGINT) AS support,
-         CAST(SUM(CASE WHEN p = y THEN n ELSE 0 END) AS BIGINT) AS tp
-  FROM pairs GROUP BY y
-), by_pred AS (
-  SELECT p AS cls, CAST(SUM(n) AS BIGINT) AS n_pred FROM pairs GROUP BY p
-), rep AS (
-  SELECT COALESCE(t.cls, q.cls) AS cls,
-         COALESCE(t.tp, 0) AS tp,
-         COALESCE(q.n_pred, 0) - COALESCE(t.tp, 0) AS fp,
-         COALESCE(t.support, 0) - COALESCE(t.tp, 0) AS fn,
-         COALESCE(t.support, 0) AS support
-  FROM by_true t FULL OUTER JOIN by_pred q ON t.cls = q.cls
-)
-SELECT CAST(cls AS BIGINT) AS cls, CAST(tp AS BIGINT) AS tp,
-       CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn,
-       CAST(support AS BIGINT) AS support,
-       CASE WHEN tp + fp > 0
-            THEN CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS prec,
-       CASE WHEN tp + fn > 0
-            THEN CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS recall,
-       CASE WHEN 2 * tp + fp + fn > 0
-            THEN CAST(2 * tp AS DOUBLE) / CAST(2 * tp + fp + fn AS DOUBLE)
-       END AS f1
-FROM rep
-"""
+), {CONFUSION_REPORT_SQL}"""
 
 
 @query("stump_score_report", oracle=_LIFECYCLE_ORACLE)

@@ -27,8 +27,24 @@ from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
 from ffi_etl_spark.functions.hashing import md5_int32
-from ffi_etl_spark.queries import query
-from ffi_etl_spark.queries_pkg.extensions import _minhash_pairs_cte
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import (
+    APPEND_BUILD,
+    APPEND_CELLS,
+    APPEND_FRACPROBE_RK,
+    AUTOK_BITS,
+    AUTOK_CELLS,
+    AUTOK_QMOD,
+    AUTOK_ROUNDS,
+    AUTOK_SLICE,
+    COS,
+    FRACPROBE,
+    FRACPROBE_RK,
+    ivf_model_cte,
+    minhash_pairs_cte,
+    nearest_cells_cte,
+    sq_codes_cte,
+)
 
 # ---------------------------------------------------------------------------
 # Adaptive MinHash-LSH: ambient probe -> split choice -> banded verify
@@ -42,7 +58,7 @@ from ffi_etl_spark.queries_pkg.extensions import _minhash_pairs_cte
 # probe or chooser change that silently shifts the split breaks a test
 # before it breaks this oracle.
 _ADAPTIVE_ORACLE = f"""
-WITH {_minhash_pairs_cte(num_perm=24, bands=4)}
+WITH {minhash_pairs_cte(num_perm=24, bands=4)}
 SELECT * FROM verified WHERE jaccard_sim >= 0.5
 """
 
@@ -111,61 +127,109 @@ def _text_lines_roundtrip(spark, sf_dir):
 # Self-scaling IVF: count probe -> sqrt(n) cells -> trained quantizer -> probe
 # ---------------------------------------------------------------------------
 
-# Gate slice: the first 500 embeddings — the full table at sf0.001 and
-# sf0.01 and a prefix at sf0.1 — so the count probe is CONSTANT at
-# every gate SF and the auto-picked cell count (choose_ivf_cells(500)
-# = 22) can be pinned in a static oracle, exactly like the adaptive
-# minhash split pin. The operator itself scales (cells tracks sqrt(n))
-# — the sf1/sf3 ladder measures it on full corpora (BASELINE.md).
-_AUTOK_SLICE = 500
-_AUTOK_CELLS = 22  # isqrt(500); pytest-pinned against choose_ivf_cells
-_AUTOK_ROUNDS = 2
-_AUTOK_BITS = 20
-_AUTOK_QMOD = 25  # 20 query vectors
+# The gate slice, cell counts and probe pins live in oracle_sql (round12
+# composes the same cell model). Every IVF oracle here replays the whole
+# program: the deterministic-Lloyd model, the cell assignments, then the
+# probe and ranking of its tier.
 
 
-def _ivf_autok_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
+def _ivf_head(cells: int, build: int) -> tuple[str, str]:
+    """The replayed cell model trained on the first ``build`` vectors,
+    and the alias of the vectors the index holds: ``e`` when the model
+    trains on the whole gate slice, else ``e5`` (the whole slice) beside
+    ``e`` (its build part)."""
+    head = f"\nWITH {ivf_model_cte(cells, build)}"
+    if build == AUTOK_SLICE:
+        return head, "e"
+    return head + f""", e5 AS (
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
+  WHERE vec_id < {AUTOK_SLICE}
+)""", "e5"
 
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_AUTOK_SLICE})"
-    cos_ec = _COS.format(a="e.v", b="c.centroid")
-    cos_qn = _COS.format(a="qa.qv", b="ca.cv")
-    return f"""
-WITH {_kmeans_det_cte(_AUTOK_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), ca AS (
-  SELECT vec_id AS neighbor_id, v AS cv, centroid_id FROM (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-  ) WHERE rk = 1
-), qa AS (
-  SELECT neighbor_id AS query_id, cv AS qv, centroid_id
-  FROM ca WHERE neighbor_id % {_AUTOK_QMOD} = 0
-), scored AS (
-  SELECT qa.query_id, ca.neighbor_id, {cos_qn} AS cosine_sim
-  FROM ca JOIN qa USING (centroid_id)
-  WHERE ca.neighbor_id <> qa.query_id
-), ranked AS (
+
+def _cosine_topk(source: str, k: int = 10) -> str:
+    return f"""ranked AS (
   SELECT query_id, neighbor_id, cosine_sim,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-  FROM scored
+  FROM {source}
 )
 SELECT query_id, neighbor_id, cosine_sim, rank::INT AS rank
-FROM ranked WHERE rank <= 10
+FROM ranked WHERE rank <= {k}
 """
 
+
+def _ivf_float_oracle(cells: int, build: int, nprobe: int = 1) -> str:
+    """The float tier: every query ranks the vectors of its ``nprobe``
+    nearest cells by exact cosine. At nprobe=1 the queries reuse the
+    corpus assignment (they are a subset of the corpus and the model
+    is shared — assignment is a pure function of (vector, model))."""
+    head, src = _ivf_head(cells, build)
+    ca = nearest_cells_cte("ca", ("vec_id AS neighbor_id", "v AS cv"), src=src)
+    if nprobe == 1:
+        qa = f"""qa AS (
+  SELECT neighbor_id AS query_id, cv AS qv, centroid_id
+  FROM ca WHERE neighbor_id % {AUTOK_QMOD} = 0
+)"""
+    else:
+        qa = nearest_cells_cte(
+            "qa", ("vec_id AS query_id", "v AS qv"), src=src, mod=AUTOK_QMOD, rk=nprobe
+        )
+    return f"""{head}, {ca}, {qa}, scored AS (
+  SELECT qa.query_id, ca.neighbor_id, {COS.format(a="qa.qv", b="ca.cv")} AS cosine_sim
+  FROM ca JOIN qa USING (centroid_id)
+  WHERE ca.neighbor_id <> qa.query_id
+), {_cosine_topk("scored")}"""
+
+
+def _ivf_autok_oracle() -> str:
+    return _ivf_float_oracle(AUTOK_CELLS, AUTOK_SLICE)
+
+
+
+def _gate_slice(spark, sf_dir):
+    """(the first AUTOK_SLICE embeddings, the query vectors among them)."""
+    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < AUTOK_SLICE)
+    return emb, emb.filter(F.col("vec_id") % AUTOK_QMOD == 0)
+
+
+def _stored_index(spark, sf_dir, tag: str, train, store_codes: bool = False):
+    """Build the IVF index on ``train`` and persist it under a fresh
+    per-gate root; returns (centroids path, assignments path). The
+    centroids (the K-row model) are written first: a torn write strands
+    the small table, not the bulk."""
+    from ffi_etl_spark.operators.similarity import (
+        ivf_index_tables,
+        write_ivf_assignments,
+    )
+
+    centroids, assignments = ivf_index_tables(
+        train, n_iter=AUTOK_ROUNDS, quantize_bits=AUTOK_BITS, store_codes=store_codes
+    )
+    root = os.path.join(
+        tempfile.gettempdir(), f"ffi_etl_{tag}_{os.path.basename(sf_dir)}"
+    )
+    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
+    cpath, apath = os.path.join(root, "centroids"), os.path.join(root, "assignments")
+    centroids.write.parquet(cpath)
+    write_ivf_assignments(assignments, apath)
+    return cpath, apath
+
+
+def _append_rest(spark, emb, cpath: str, apath: str):
+    """Append the vectors past APPEND_BUILD to the stored index against
+    the STORED model; returns that model."""
+    from ffi_etl_spark.operators.similarity import (
+        append_ivf_assignments,
+        ivf_index_append,
+    )
+
+    stored_model = spark.read.parquet(cpath)
+    batch = emb.filter(F.col("vec_id") >= APPEND_BUILD)
+    append_ivf_assignments(
+        ivf_index_append(stored_model, spark.read.parquet(apath), batch), apath
+    )
+    return stored_model
 
 @query("ann_ivf_autok", oracle=_ivf_autok_oracle())
 def _ann_ivf_autok(spark, sf_dir):
@@ -187,20 +251,14 @@ def _ann_ivf_autok(spark, sf_dir):
     independently and identically)."""
     from ffi_etl_spark.operators.similarity import ann_ivf_autok
 
-    emb = table(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") < _AUTOK_SLICE
-    )
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
+    emb, queries = _gate_slice(spark, sf_dir)
     return ann_ivf_autok(
-        emb, queries, dim=64, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
+        emb, queries, dim=64, n_iter=AUTOK_ROUNDS, quantize_bits=AUTOK_BITS
     )
 
 
-# -- round 9 (late session): the persisted IVF index. Registered here,
-# beside the autok query whose oracle it shares verbatim, because the
-# oracle builder and the _AUTOK_* pins live in this module (registering
-# from round9.py created a circular import when a test imported round7
-# directly: round7 -> queries -> round9 -> partially-initialized round7).
+# -- round 9 (late session): the persisted IVF index, registered beside
+# the autok query whose oracle it shares verbatim.
 
 
 @query("ann_ivf_stored", oracle=_ivf_autok_oracle())
@@ -215,130 +273,46 @@ def _ann_ivf_stored(spark, sf_dir):
     ``_cells``/``_qbits``), and queried. The oracle is
     ``ann_ivf_autok``'s verbatim: the stored roundtrip must change WHEN
     the build cost is paid, never the answer."""
-    import shutil
+    from ffi_etl_spark.operators.similarity import ann_ivf_query_stored
 
-    from ffi_etl_spark.operators.similarity import (
-        ann_ivf_query_stored,
-        ivf_index_tables,
-        write_ivf_assignments,
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(spark, sf_dir, "ivfidx", emb)
+    return ann_ivf_query_stored(
+        spark.read.parquet(cpath), spark.read.parquet(apath), queries
     )
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-    centroids, assignments = ivf_index_tables(
-        emb, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
-    )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivfidx_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    # centroids (the K-row model) first: a torn write strands the small
-    # table, not the bulk
-    centroids.write.parquet(os.path.join(root, "centroids"))
-    write_ivf_assignments(assignments, os.path.join(root, "assignments"))
-    stored_model = spark.read.parquet(os.path.join(root, "centroids"))
-    stored_index = spark.read.parquet(os.path.join(root, "assignments"))
-    return ann_ivf_query_stored(stored_model, stored_index, queries)
 
 
 # -- round 9 (late session): incremental maintenance of the stored
-# index. The model trains on the first _APPEND_BUILD vectors; the
+# index. The model trains on the first APPEND_BUILD vectors; the
 # remaining slice appends against that STORED model (adopt, never
 # retrain mid-append — ivf_index_append's contract). Assignment is a
 # pure function of (vector, model), so the oracle assigns the full
-# slice against the replayed _APPEND_BUILD-trained model in one pass —
+# slice against the replayed APPEND_BUILD-trained model in one pass —
 # exactly what stored ∪ appended equals.
-_APPEND_BUILD = 400
-_APPEND_CELLS = 20  # isqrt(400); pytest-pinned against choose_ivf_cells
 _DRIFT_FLOOR_Q = 524288  # FLOOR(0.5 * 2^20): the quantized sim floor
 
 
 def _ivf_append_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
-
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_APPEND_BUILD})"
-    cos_ec = _COS.format(a="e5.v", b="c.centroid")
-    cos_qn = _COS.format(a="qa.qv", b="ca.cv")
-    return f"""
-WITH {_kmeans_det_cte(_APPEND_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), e5 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE vec_id < {_AUTOK_SLICE}
-), ca AS (
-  SELECT vec_id AS neighbor_id, v AS cv, centroid_id FROM (
-    SELECT e5.vec_id, e5.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e5.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e5 CROSS JOIN cf c
-  ) WHERE rk = 1
-), qa AS (
-  SELECT neighbor_id AS query_id, cv AS qv, centroid_id
-  FROM ca WHERE neighbor_id % {_AUTOK_QMOD} = 0
-), scored AS (
-  SELECT qa.query_id, ca.neighbor_id, {cos_qn} AS cosine_sim
-  FROM ca JOIN qa USING (centroid_id)
-  WHERE ca.neighbor_id <> qa.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine_sim, rank::INT AS rank
-FROM ranked WHERE rank <= 10
-"""
+    return _ivf_float_oracle(APPEND_CELLS, APPEND_BUILD)
 
 
 @query("ann_ivf_append", oracle=_ivf_append_oracle())
 def _ann_ivf_append(spark, sf_dir):
     """Incremental index maintenance end to end: build + persist the
-    index on the first _APPEND_BUILD vectors, append the rest of the
+    index on the first APPEND_BUILD vectors, append the rest of the
     slice against the STORED model (ivf_index_append — adopt, never
     retrain; replay-idempotent via the stored-id anti-join), then
     query the GROWN index. Queries include appended ids, so the probe
     exercises rows from both eras. The oracle trains the same model on
     the build slice and assigns the full slice in one pass — legal
     because assignment is a pure function of (vector, model)."""
-    import shutil
+    from ffi_etl_spark.operators.similarity import ann_ivf_query_stored
 
-    from ffi_etl_spark.operators.similarity import (
-        ann_ivf_query_stored,
-        append_ivf_assignments,
-        ivf_index_append,
-        ivf_index_tables,
-        write_ivf_assignments,
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(
+        spark, sf_dir, "ivfappend", emb.filter(F.col("vec_id") < APPEND_BUILD)
     )
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    base = emb.filter(F.col("vec_id") < _APPEND_BUILD)
-    batch = emb.filter(F.col("vec_id") >= _APPEND_BUILD)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-
-    centroids, assignments = ivf_index_tables(
-        base, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
-    )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivfappend_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    cpath, apath = os.path.join(root, "centroids"), os.path.join(root, "assignments")
-    centroids.write.parquet(cpath)
-    write_ivf_assignments(assignments, apath)
-
-    stored_model = spark.read.parquet(cpath)
-    append_ivf_assignments(
-        ivf_index_append(stored_model, spark.read.parquet(apath), batch), apath
-    )
+    stored_model = _append_rest(spark, emb, cpath, apath)
     return ann_ivf_query_stored(stored_model, spark.read.parquet(apath), queries)
 
 
@@ -350,53 +324,7 @@ def _ivf_stored_multiprobe_oracle(rk: int = 2) -> str:
     ann_ivf_stored_nprobe2 gate; ann_ivf_stored_fracprobe passes the
     ceil(probe_frac · cells) the engine derives from the stored
     ``_cells`` stamp."""
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
-
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_AUTOK_SLICE})"
-    cos_ec = _COS.format(a="e.v", b="c.centroid")
-    cos_qn = _COS.format(a="qa.qv", b="ca.cv")
-    return f"""
-WITH {_kmeans_det_cte(_AUTOK_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), ca AS (
-  SELECT vec_id AS neighbor_id, v AS cv, centroid_id FROM (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-  ) WHERE rk = 1
-), qa AS (
-  SELECT vec_id AS query_id, v AS qv, centroid_id FROM (
-    SELECT e.vec_id, e.v, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-    WHERE e.vec_id % {_AUTOK_QMOD} = 0
-  ) WHERE rk <= {rk}
-), scored AS (
-  SELECT qa.query_id, ca.neighbor_id, {cos_qn} AS cosine_sim
-  FROM ca JOIN qa USING (centroid_id)
-  WHERE ca.neighbor_id <> qa.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, cosine_sim, rank::INT AS rank
-FROM ranked WHERE rank <= 10
-"""
+    return _ivf_float_oracle(AUTOK_CELLS, AUTOK_SLICE, nprobe=rk)
 
 
 @query("ann_ivf_stored_nprobe2", oracle=_ivf_stored_multiprobe_oracle(2))
@@ -410,41 +338,16 @@ def _ann_ivf_stored_nprobe2(spark, sf_dir):
     query assignment widened to rk <= 2, same tie rules. Before this
     gate the nprobe>1 stored path was pytest-covered only
     (monotonicity lock, tests/test_round10.py)."""
-    import shutil
+    from ffi_etl_spark.operators.similarity import ann_ivf_query_stored
 
-    from ffi_etl_spark.operators.similarity import (
-        ann_ivf_query_stored,
-        ivf_index_tables,
-        write_ivf_assignments,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-    centroids, assignments = ivf_index_tables(
-        emb, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
-    )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivfnp2_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    centroids.write.parquet(os.path.join(root, "centroids"))
-    write_ivf_assignments(assignments, os.path.join(root, "assignments"))
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(spark, sf_dir, "ivfnp2", emb)
     return ann_ivf_query_stored(
-        spark.read.parquet(os.path.join(root, "centroids")),
-        spark.read.parquet(os.path.join(root, "assignments")),
-        queries,
-        nprobe=2,
+        spark.read.parquet(cpath), spark.read.parquet(apath), queries, nprobe=2
     )
 
 
-# probe_frac for the fracprobe gate: ceil(0.1 * 22 cells) = 3 probed
-# cells — the oracle pins rk <= 3, and test_round11 locks the ceil rule
-# itself (effective nprobe grows with the stored cell count).
-_FRACPROBE = 0.1
-_FRACPROBE_RK = 3  # ceil(_FRACPROBE * _AUTOK_CELLS); pytest-pinned
-
-
-@query("ann_ivf_stored_fracprobe", oracle=_ivf_stored_multiprobe_oracle(_FRACPROBE_RK))
+@query("ann_ivf_stored_fracprobe", oracle=_ivf_stored_multiprobe_oracle(FRACPROBE_RK))
 def _ann_ivf_stored_fracprobe(spark, sf_dir):
     """The STORED index probed at a fixed FRACTION of its cells
     (probe_frac=0.1 → nprobe = ceil(0.1 · 22) = 3 on the gate slice) —
@@ -457,35 +360,20 @@ def _ann_ivf_stored_fracprobe(spark, sf_dir):
     stamp — the oracle replays the program with the query assignment
     widened to rk <= 3, so a ceil-rule or stamp-read bug fails the
     hash, not just a recall curve."""
-    import shutil
+    from ffi_etl_spark.operators.similarity import ann_ivf_query_stored
 
-    from ffi_etl_spark.operators.similarity import (
-        ann_ivf_query_stored,
-        ivf_index_tables,
-        write_ivf_assignments,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-    centroids, assignments = ivf_index_tables(
-        emb, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
-    )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivffrac_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    centroids.write.parquet(os.path.join(root, "centroids"))
-    write_ivf_assignments(assignments, os.path.join(root, "assignments"))
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(spark, sf_dir, "ivffrac", emb)
     return ann_ivf_query_stored(
-        spark.read.parquet(os.path.join(root, "centroids")),
-        spark.read.parquet(os.path.join(root, "assignments")),
+        spark.read.parquet(cpath),
+        spark.read.parquet(apath),
         queries,
-        probe_frac=_FRACPROBE,
+        probe_frac=FRACPROBE,
     )
 
 
 @query(
-    "ann_ivf_autok_fracprobe", oracle=_ivf_stored_multiprobe_oracle(_FRACPROBE_RK)
+    "ann_ivf_autok_fracprobe", oracle=_ivf_stored_multiprobe_oracle(FRACPROBE_RK)
 )
 def _ann_ivf_autok_fracprobe(spark, sf_dir):
     """The IN-QUERY tier at the same fraction dial
@@ -497,18 +385,17 @@ def _ann_ivf_autok_fracprobe(spark, sf_dir):
     answer (the ann_ivf_stored precedent, applied to the dial)."""
     from ffi_etl_spark.operators.similarity import ann_ivf_autok
 
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
+    emb, queries = _gate_slice(spark, sf_dir)
     return ann_ivf_autok(
-        emb, queries, dim=64, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS,
-        probe_frac=_FRACPROBE,
+        emb, queries, dim=64, n_iter=AUTOK_ROUNDS, quantize_bits=AUTOK_BITS,
+        probe_frac=FRACPROBE,
     )
 
 
 @query("ann_ivf_churn", oracle=_ivf_append_oracle())
 def _ann_ivf_churn(spark, sf_dir):
     """Round-10 maintenance gate: the append-CHURN lifecycle — build +
-    persist on the first _APPEND_BUILD vectors, append the rest in
+    persist on the first APPEND_BUILD vectors, append the rest in
     THREE batches through the layout-aware writer
     (append_ivf_assignments: one file per touched cell per append),
     run per-cell compaction (compact_ivf_assignments, threshold forced
@@ -518,37 +405,21 @@ def _ann_ivf_churn(spark, sf_dir):
     assignment is a pure function of (vector, model), and compaction
     rewrites files, never rows. A compaction bug that drops, dups, or
     re-assigns rows fails this gate's hash."""
-    import shutil
-
     from ffi_etl_spark.operators.similarity import (
         ann_ivf_query_stored,
         append_ivf_assignments,
         compact_ivf_assignments,
         ivf_index_append,
-        ivf_index_tables,
-        write_ivf_assignments,
     )
 
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    base = emb.filter(F.col("vec_id") < _APPEND_BUILD)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-
-    centroids, assignments = ivf_index_tables(
-        base, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(
+        spark, sf_dir, "ivfchurn", emb.filter(F.col("vec_id") < APPEND_BUILD)
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivfchurn_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    cpath, apath = os.path.join(root, "centroids"), os.path.join(root, "assignments")
-    centroids.write.parquet(cpath)
-    write_ivf_assignments(assignments, apath)
-
     stored_model = spark.read.parquet(cpath)
-    hi = _AUTOK_SLICE
-    per = (hi - _APPEND_BUILD + 2) // 3
+    per = (AUTOK_SLICE - APPEND_BUILD + 2) // 3
     for b in range(3):
-        lo = _APPEND_BUILD + b * per
+        lo = APPEND_BUILD + b * per
         batch = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + per))
         append_ivf_assignments(
             ivf_index_append(stored_model, spark.read.parquet(apath), batch), apath
@@ -560,23 +431,12 @@ def _ann_ivf_churn(spark, sf_dir):
 
 
 def _ivf_drift_oracle() -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
-
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_APPEND_BUILD})"
-    cos_bc = _COS.format(a="b.v", b="c.centroid")
+    scale = f"{1 << AUTOK_BITS}.0"
+    cos_bc = COS.format(a="b.v", b="c.centroid")
     return f"""
-WITH {_kmeans_det_cte(_APPEND_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), b AS (
+WITH {ivf_model_cte(APPEND_CELLS, APPEND_BUILD)}, b AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE vec_id >= {_APPEND_BUILD} AND vec_id < {_AUTOK_SLICE}
+  WHERE vec_id >= {APPEND_BUILD} AND vec_id < {AUTOK_SLICE}
 ), best AS (
   SELECT vec_id,
          CAST(FLOOR(sim * {scale}) AS BIGINT) AS qsim, centroid_id FROM (
@@ -617,13 +477,13 @@ def _ann_ivf_drift(spark, sf_dir):
         ivf_train_quantizer,
     )
 
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    base = emb.filter(F.col("vec_id") < _APPEND_BUILD)
-    batch = emb.filter(F.col("vec_id") >= _APPEND_BUILD)
+    emb, _ = _gate_slice(spark, sf_dir)
+    base = emb.filter(F.col("vec_id") < APPEND_BUILD)
+    batch = emb.filter(F.col("vec_id") >= APPEND_BUILD)
     cents, _ = ivf_train_quantizer(
-        base, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS
+        base, n_iter=AUTOK_ROUNDS, quantize_bits=AUTOK_BITS
     )
-    return ivf_quantizer_drift(cents, batch, sim_floor=0.5, scale_bits=_AUTOK_BITS)
+    return ivf_quantizer_drift(cents, batch, sim_floor=0.5, scale_bits=AUTOK_BITS)
 
 
 _WHOLE_DOC_MOD = 25  # 20 files at sf0.01, 200 at sf0.1 — whole-file scale
@@ -688,53 +548,19 @@ def _documents_whole_roundtrip(spark, sf_dir):
 _INT8_RERANK = 4
 
 
-def _ivf_stored_int8_oracle(rk: int, rerank_factor: int, k: int = 10) -> str:
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
-
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_AUTOK_SLICE})"
-    cos_ec = _COS.format(a="e.v", b="c.centroid")
-    cos_rr = _COS.format(a="eq.v", b="en.v")
-    return f"""
-WITH {_kmeans_det_cte(_AUTOK_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), ca AS (
-  SELECT vec_id AS neighbor_id, centroid_id FROM (
-    SELECT e.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-  ) WHERE rk = 1
-), qa AS (
-  SELECT vec_id AS query_id, centroid_id FROM (
-    SELECT e.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-    WHERE e.vec_id % {_AUTOK_QMOD} = 0
-  ) WHERE rk <= {rk}
-), dimstats AS (
-  SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-  FROM e CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-  GROUP BY i
-), codes AS (
-  SELECT e.vec_id, d.i,
-         CASE WHEN d.mx = d.mn THEN 0
-              ELSE GREATEST(0, LEAST(255,
-                CAST(FLOOR((e.v[d.i] - d.mn) * 255.0 / (d.mx - d.mn)) AS BIGINT)))
-         END AS code
-  FROM e CROSS JOIN dimstats d
-), d2 AS (
+def _ivf_int8_oracle(
+    cells: int, build: int, rk: int, rerank_factor: int | None, k: int = 10
+) -> str:
+    """The int8 tier: the per-dimension codebook is fit on the build
+    slice ``e`` and codes every indexed vector, the probed cells are
+    ranked by integer L2 in code space, and a rerank_factor·k shortlist
+    is re-ranked by exact cosine. rerank_factor=None stops at the
+    code-space ranking: (query_id, neighbor_id, code_d2, rank) with
+    exact BIGINT distances — the cheapest-read tier's own gate."""
+    head, src = _ivf_head(cells, build)
+    ca = nearest_cells_cte("ca", ("vec_id AS neighbor_id",), src=src)
+    qa = nearest_cells_cte("qa", ("vec_id AS query_id",), src=src, mod=AUTOK_QMOD, rk=rk)
+    body = f"""{head}, {ca}, {qa}, {sq_codes_cte(src)}, d2 AS (
   SELECT qa.query_id, ca.neighbor_id,
          SUM((cc.code - qc.code) * (cc.code - qc.code)) AS code_d2
   FROM ca JOIN qa USING (centroid_id)
@@ -742,7 +568,18 @@ cf AS (
   JOIN codes qc ON qc.vec_id = qa.query_id AND qc.i = cc.i
   WHERE ca.neighbor_id <> qa.query_id
   GROUP BY qa.query_id, ca.neighbor_id
-), short AS (
+)"""
+    if rerank_factor is None:
+        return body + f""", ranked AS (
+  SELECT query_id, neighbor_id, CAST(code_d2 AS BIGINT) AS code_d2,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY code_d2 ASC, neighbor_id ASC) AS rank
+  FROM d2
+)
+SELECT query_id, neighbor_id, code_d2, rank::INT AS rank
+FROM ranked WHERE rank <= {k}
+"""
+    return body + f""", short AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id,
            ROW_NUMBER() OVER (PARTITION BY query_id
@@ -750,24 +587,16 @@ cf AS (
     FROM d2
   ) WHERE rk <= {rerank_factor * k}
 ), rr AS (
-  SELECT s.query_id, s.neighbor_id, {cos_rr} AS cosine_sim
+  SELECT s.query_id, s.neighbor_id, {COS.format(a="eq.v", b="en.v")} AS cosine_sim
   FROM short s
-  JOIN e eq ON eq.vec_id = s.query_id
-  JOIN e en ON en.vec_id = s.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-  FROM rr
-)
-SELECT query_id, neighbor_id, cosine_sim, rank::INT AS rank
-FROM ranked WHERE rank <= {k}
-"""
+  JOIN {src} eq ON eq.vec_id = s.query_id
+  JOIN {src} en ON en.vec_id = s.neighbor_id
+), {_cosine_topk("rr", k)}"""
 
 
 @query(
     "ann_ivf_stored_int8",
-    oracle=_ivf_stored_int8_oracle(_FRACPROBE_RK, _INT8_RERANK),
+    oracle=_ivf_int8_oracle(AUTOK_CELLS, AUTOK_SLICE, FRACPROBE_RK, _INT8_RERANK),
 )
 def _ann_ivf_stored_int8(spark, sf_dir):
     """The STORED index built with int8 codes beside the floats
@@ -781,104 +610,22 @@ def _ann_ivf_stored_int8(spark, sf_dir):
     floats. The oracle replays every stage, so this gate pins the
     codebook fit, the clamp, the floor rule, the integer kernel, both
     tie rules, and the re-rank — not just a recall curve."""
-    import shutil
+    from ffi_etl_spark.operators.similarity import ann_ivf_query_stored_int8
 
-    from ffi_etl_spark.operators.similarity import (
-        ann_ivf_query_stored_int8,
-        ivf_index_tables,
-        write_ivf_assignments,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-    centroids, assignments = ivf_index_tables(
-        emb, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS, store_codes=True
-    )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivfint8_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    centroids.write.parquet(os.path.join(root, "centroids"))
-    write_ivf_assignments(assignments, os.path.join(root, "assignments"))
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(spark, sf_dir, "ivfint8", emb, store_codes=True)
     return ann_ivf_query_stored_int8(
-        spark.read.parquet(os.path.join(root, "centroids")),
-        spark.read.parquet(os.path.join(root, "assignments")),
+        spark.read.parquet(cpath),
+        spark.read.parquet(apath),
         queries,
-        probe_frac=_FRACPROBE,
+        probe_frac=FRACPROBE,
         rerank_factor=_INT8_RERANK,
     )
 
 
-def _ivf_int8_codes_only_oracle(rk: int, k: int = 10) -> str:
-    """The int8 oracle truncated at the code-space ranking (no float
-    re-rank): output (query_id, neighbor_id, code_d2, rank) with exact
-    BIGINT distances — the cheapest-read tier's own gate."""
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
-
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_AUTOK_SLICE})"
-    cos_ec = _COS.format(a="e.v", b="c.centroid")
-    return f"""
-WITH {_kmeans_det_cte(_AUTOK_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), ca AS (
-  SELECT vec_id AS neighbor_id, centroid_id FROM (
-    SELECT e.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-  ) WHERE rk = 1
-), qa AS (
-  SELECT vec_id AS query_id, centroid_id FROM (
-    SELECT e.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e CROSS JOIN cf c
-    WHERE e.vec_id % {_AUTOK_QMOD} = 0
-  ) WHERE rk <= {rk}
-), dimstats AS (
-  SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-  FROM e CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-  GROUP BY i
-), codes AS (
-  SELECT e.vec_id, d.i,
-         CASE WHEN d.mx = d.mn THEN 0
-              ELSE GREATEST(0, LEAST(255,
-                CAST(FLOOR((e.v[d.i] - d.mn) * 255.0 / (d.mx - d.mn)) AS BIGINT)))
-         END AS code
-  FROM e CROSS JOIN dimstats d
-), d2 AS (
-  SELECT qa.query_id, ca.neighbor_id,
-         SUM((cc.code - qc.code) * (cc.code - qc.code)) AS code_d2
-  FROM ca JOIN qa USING (centroid_id)
-  JOIN codes cc ON cc.vec_id = ca.neighbor_id
-  JOIN codes qc ON qc.vec_id = qa.query_id AND qc.i = cc.i
-  WHERE ca.neighbor_id <> qa.query_id
-  GROUP BY qa.query_id, ca.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, CAST(code_d2 AS BIGINT) AS code_d2,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY code_d2 ASC, neighbor_id ASC) AS rank
-  FROM d2
-)
-SELECT query_id, neighbor_id, code_d2, rank::INT AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
 @query(
     "ann_ivf_stored_int8_codes",
-    oracle=_ivf_int8_codes_only_oracle(_FRACPROBE_RK),
+    oracle=_ivf_int8_oracle(AUTOK_CELLS, AUTOK_SLICE, FRACPROBE_RK, None),
 )
 def _ann_ivf_stored_int8_codes(spark, sf_dir):
     """The code-space tier WITHOUT the float re-rank
@@ -888,131 +635,28 @@ def _ann_ivf_stored_int8_codes(spark, sf_dir):
     recall-tolerant retrieval stage). Exact BIGINT distances make this
     the one ANN output that is bit-deterministic END TO END with no
     float column anywhere, so the oracle replays it to the hash."""
-    import shutil
+    from ffi_etl_spark.operators.similarity import ann_ivf_query_stored_int8
 
-    from ffi_etl_spark.operators.similarity import (
-        ann_ivf_query_stored_int8,
-        ivf_index_tables,
-        write_ivf_assignments,
-    )
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-    centroids, assignments = ivf_index_tables(
-        emb, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS, store_codes=True
-    )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivfint8c_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    centroids.write.parquet(os.path.join(root, "centroids"))
-    write_ivf_assignments(assignments, os.path.join(root, "assignments"))
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(spark, sf_dir, "ivfint8c", emb, store_codes=True)
     return ann_ivf_query_stored_int8(
-        spark.read.parquet(os.path.join(root, "centroids")),
-        spark.read.parquet(os.path.join(root, "assignments")),
+        spark.read.parquet(cpath),
+        spark.read.parquet(apath),
         queries,
-        probe_frac=_FRACPROBE,
+        probe_frac=FRACPROBE,
         rerank_factor=None,
     )
 
 
-# fracprobe on the 20-cell append-gate model: ceil(0.1 * 20) = 2
-_APPEND_FRACPROBE_RK = 2
-
-
-def _ivf_append_int8_oracle(rk: int, rerank_factor: int, k: int = 10) -> str:
-    """The append-path int8 oracle: the quantizer AND the codebook are
-    both fit on the BASE slice only (adopt-never-retrain applies to
-    the scalar quantizer too), then the FULL slice is assigned and
-    coded under them — appended vectors can fall outside the base's
-    per-dimension range, so the GREATEST/LEAST clamp is load-bearing
-    here, not a no-op."""
-    from ffi_etl_spark.queries_pkg.extensions import _COS, _kmeans_det_cte
-
-    scale = f"{1 << _AUTOK_BITS}.0"
-    src = f"(SELECT * FROM embeddings WHERE vec_id < {_APPEND_BUILD})"
-    cos_ec = _COS.format(a="e5.v", b="c.centroid")
-    cos_rr = _COS.format(a="eq.v", b="en.v")
-    return f"""
-WITH {_kmeans_det_cte(_APPEND_CELLS, _AUTOK_ROUNDS, source=src)},
-cf AS (
-  SELECT centroid_id, list(CAST(sx AS DOUBLE) ORDER BY i) AS centroid
-  FROM (
-    SELECT centroid_id, i, SUM(CAST(FLOOR(v[i] * {scale}) AS BIGINT)) AS sx
-    FROM a{_AUTOK_ROUNDS} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-    GROUP BY centroid_id, i
-  ) GROUP BY centroid_id
-), e5 AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE vec_id < {_AUTOK_SLICE}
-), ca AS (
-  SELECT vec_id AS neighbor_id, centroid_id FROM (
-    SELECT e5.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e5.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e5 CROSS JOIN cf c
-  ) WHERE rk = 1
-), qa AS (
-  SELECT vec_id AS query_id, centroid_id FROM (
-    SELECT e5.vec_id, c.centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY e5.vec_id
-             ORDER BY {cos_ec} DESC, c.centroid_id ASC
-           ) AS rk
-    FROM e5 CROSS JOIN cf c
-    WHERE e5.vec_id % {_AUTOK_QMOD} = 0
-  ) WHERE rk <= {rk}
-), dimstats AS (
-  SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-  FROM e CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i)
-  GROUP BY i
-), codes AS (
-  SELECT e5.vec_id, d.i,
-         CASE WHEN d.mx = d.mn THEN 0
-              ELSE GREATEST(0, LEAST(255,
-                CAST(FLOOR((e5.v[d.i] - d.mn) * 255.0 / (d.mx - d.mn)) AS BIGINT)))
-         END AS code
-  FROM e5 CROSS JOIN dimstats d
-), d2 AS (
-  SELECT qa.query_id, ca.neighbor_id,
-         SUM((cc.code - qc.code) * (cc.code - qc.code)) AS code_d2
-  FROM ca JOIN qa USING (centroid_id)
-  JOIN codes cc ON cc.vec_id = ca.neighbor_id
-  JOIN codes qc ON qc.vec_id = qa.query_id AND qc.i = cc.i
-  WHERE ca.neighbor_id <> qa.query_id
-  GROUP BY qa.query_id, ca.neighbor_id
-), short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY code_d2 ASC, neighbor_id ASC) AS rk
-    FROM d2
-  ) WHERE rk <= {rerank_factor * k}
-), rr AS (
-  SELECT s.query_id, s.neighbor_id, {cos_rr} AS cosine_sim
-  FROM short s
-  JOIN e5 eq ON eq.vec_id = s.query_id
-  JOIN e5 en ON en.vec_id = s.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-  FROM rr
-)
-SELECT query_id, neighbor_id, cosine_sim, rank::INT AS rank
-FROM ranked WHERE rank <= {k}
-"""
-
-
 @query(
     "ann_ivf_append_int8",
-    oracle=_ivf_append_int8_oracle(_APPEND_FRACPROBE_RK, _INT8_RERANK),
+    oracle=_ivf_int8_oracle(
+        APPEND_CELLS, APPEND_BUILD, APPEND_FRACPROBE_RK, _INT8_RERANK
+    ),
 )
 def _ann_ivf_append_int8(spark, sf_dir):
     """Incremental maintenance of the CODED index end to end: build +
-    persist with store_codes=True on the first _APPEND_BUILD vectors,
+    persist with store_codes=True on the first APPEND_BUILD vectors,
     append the rest through ivf_index_append (which codes the batch
     under the STORED codebook — appended vectors can fall outside the
     base's per-dimension min/max, so this gate is where the
@@ -1022,40 +666,18 @@ def _ann_ivf_append_int8(spark, sf_dir):
     base slice and codes the full slice under them — legal because
     assignment and coding are both pure functions of
     (vector, stored model, stored codebook)."""
-    import shutil
+    from ffi_etl_spark.operators.similarity import ann_ivf_query_stored_int8
 
-    from ffi_etl_spark.operators.similarity import (
-        ann_ivf_query_stored_int8,
-        append_ivf_assignments,
-        ivf_index_append,
-        ivf_index_tables,
-        write_ivf_assignments,
+    emb, queries = _gate_slice(spark, sf_dir)
+    cpath, apath = _stored_index(
+        spark, sf_dir, "ivfapp8", emb.filter(F.col("vec_id") < APPEND_BUILD),
+        store_codes=True,
     )
-
-    emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < _AUTOK_SLICE)
-    base = emb.filter(F.col("vec_id") < _APPEND_BUILD)
-    batch = emb.filter(F.col("vec_id") >= _APPEND_BUILD)
-    queries = emb.filter(F.col("vec_id") % _AUTOK_QMOD == 0)
-
-    centroids, assignments = ivf_index_tables(
-        base, n_iter=_AUTOK_ROUNDS, quantize_bits=_AUTOK_BITS, store_codes=True
-    )
-    root = os.path.join(
-        tempfile.gettempdir(), f"ffi_etl_ivfapp8_{os.path.basename(sf_dir)}"
-    )
-    shutil.rmtree(root, ignore_errors=True)  # stale cells would add rows
-    cpath, apath = os.path.join(root, "centroids"), os.path.join(root, "assignments")
-    centroids.write.parquet(cpath)
-    write_ivf_assignments(assignments, apath)
-
-    stored_model = spark.read.parquet(cpath)
-    append_ivf_assignments(
-        ivf_index_append(stored_model, spark.read.parquet(apath), batch), apath
-    )
+    stored_model = _append_rest(spark, emb, cpath, apath)
     return ann_ivf_query_stored_int8(
         stored_model,
         spark.read.parquet(apath),
         queries,
-        probe_frac=_FRACPROBE,
+        probe_frac=FRACPROBE,
         rerank_factor=_INT8_RERANK,
     )

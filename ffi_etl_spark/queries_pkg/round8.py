@@ -37,8 +37,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ffi_etl_spark.catalog import table
-from ffi_etl_spark.queries import query
-from ffi_etl_spark.queries_pkg.round5 import _DSIR_ORACLE
+from ffi_etl_spark.queries_pkg import query
+from ffi_etl_spark.queries_pkg.oracle_sql import DSIR_ORACLE
 
 # Shared CTE text: whitespace token counts per document — identical to
 # the composed dsir_budget_selection oracle's tk CTE (fam_textsel.py).
@@ -66,7 +66,7 @@ def _budget_frames(spark, sf_dir):
 @query(
     "dsir_budget_inputs",
     oracle=rf"""
-WITH w AS ({_DSIR_ORACLE}
+WITH w AS ({DSIR_ORACLE}
 ), {_TK_CTE}
 SELECT w.doc_id, w.weight_q, tk.ntok
 FROM w JOIN tk USING (doc_id)
@@ -85,7 +85,7 @@ def _dsir_budget_inputs(spark, sf_dir):
 @query(
     "dsir_budget_offsets",
     oracle=rf"""
-WITH w AS ({_DSIR_ORACLE}
+WITH w AS ({DSIR_ORACLE}
 ), {_TK_CTE}
 SELECT w.doc_id,
        CAST(COALESCE(SUM(tk.ntok) OVER (
@@ -122,7 +122,7 @@ _CUTPOINT_RANGES = 32  # global_cumsum_exclusive's num_ranges default
 @query(
     "dsir_budget_cutpoints",
     oracle=rf"""
-WITH w AS ({_DSIR_ORACLE}
+WITH w AS ({DSIR_ORACLE}
 ), {_TK_CTE}
 , j AS (
   SELECT CAST(-w.weight_q AS BIGINT) AS negw, w.doc_id

@@ -35,7 +35,7 @@ from ffi_etl_spark.operators.domains import (
     domain_token_cap,
     short_doc_domains,
 )
-from ffi_etl_spark.queries import query
+from ffi_etl_spark.queries_pkg import query
 
 _CAP = 10
 

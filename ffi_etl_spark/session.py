@@ -58,6 +58,10 @@ def get_session(app_name: str = "ffi_etl_spark", master: str | None = None) -> S
         builder = builder.config(k, v)
     # local mode: the driver is the only JVM — give it headroom
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+    # the console progress bar polls the status store every 200 ms and
+    # writes [Stage n:> bars to stderr; a core conf fixed at start, so it
+    # is set here and not in ENGINE_CONFS (configure would skip it)
+    builder = builder.config("spark.ui.showConsoleProgress", "false")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -27,6 +27,9 @@ def test_configure_skips_only_confs_fixed_at_start(spark, monkeypatch, caplog):
     # get_session set it before start
     assert "spark.python.sql.dataFrameDebugging.enabled" in caplog.text
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    # a core conf get_session sets on the builder, outside ENGINE_CONFS
+    assert "spark.ui.showConsoleProgress" not in session.ENGINE_CONFS
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
     monkeypatch.setitem(session.ENGINE_CONFS, "spark.sql.shuffle.partitions", "not-a-number")
     with pytest.raises(IllegalArgumentException):
         session.configure(spark)

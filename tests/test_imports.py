@@ -1,94 +1,133 @@
-"""Every queries_pkg module must be importable DIRECTLY (round 12).
+"""The query registry's module structure.
 
-The registration modules import oracle helpers from earlier siblings at
-decoration time (round12 ← round7/extensions, round5 ← round4, …). Before
-queries_pkg/__init__.py imported the modules in registry order, a direct
-``import ffi_etl_spark.queries_pkg.<X>`` as the FIRST touch of the
-package left X partially initialized while the registry pulled in later
-siblings that import from X — an order-dependent ImportError that bit
-``pytest tests/test_round12.py tests/test_round9.py`` run in isolation.
-
-Each module is imported in a FRESH interpreter (the failure only exists
-on first touch), no Spark session needed.
-
-Round 13 (ADVICE r12): the module list is PARSED out of queries.py with
-``ast`` instead of hand-maintained — a module registered in the real
-lists can no longer silently escape the direct-import lock, and the
-ordering check binds to the actual import statement, not to the first
-similarly-indented substring anywhere in the file.
+``ffi_etl_spark/queries_pkg/__init__.py`` is a leaf (QUERIES, ORACLES,
+``query``); ``ffi_etl_spark/queries.py`` holds the one list of
+registration modules and fixes the registry order; shared oracle SQL
+lives in ``queries_pkg/oracle_sql.py``, which registers nothing. No
+registration module imports another, so any module can be imported
+first and the registry still comes out in the same order with the same
+oracles. No Spark session needed.
 """
 
 from __future__ import annotations
 
 import ast
+import json
 import os
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG_DIR = os.path.join(REPO, "ffi_etl_spark", "queries_pkg")
+PKG = "ffi_etl_spark.queries_pkg"
+HELPERS = "oracle_sql"
 
 
-def _parsed_import_list(path: str) -> list[str]:
-    """The names of the one ``from ffi_etl_spark.queries_pkg import (…)``
-    statement in ``path``, in source order (ast preserves it)."""
-    tree = ast.parse(open(path).read())
-    lists = [
-        [a.name for a in node.names]
-        for node in ast.walk(tree)
-        if isinstance(node, ast.ImportFrom)
-        and node.module == "ffi_etl_spark.queries_pkg"
-    ]
-    assert len(lists) == 1, (
-        f"{path}: expected exactly one 'from ffi_etl_spark.queries_pkg "
-        f"import (…)' statement, found {len(lists)}"
-    )
-    return lists[0]
+def _modules() -> list[str]:
+    """The MODULES tuple of queries.py, parsed (not imported)."""
+    tree = ast.parse(open(os.path.join(REPO, "ffi_etl_spark", "queries.py")).read())
+    for node in tree.body:
+        if isinstance(node, ast.AnnAssign) and getattr(node.target, "id", "") == "MODULES":
+            return list(ast.literal_eval(node.value))
+    raise AssertionError("queries.py: no MODULES tuple")
 
 
-MODULES = _parsed_import_list(os.path.join(REPO, "ffi_etl_spark", "queries.py"))
+MODULES = _modules()
 
 
-def test_registry_order_matches_init():
-    """queries.py and queries_pkg/__init__.py must list the same modules
-    in the same order — the __init__ ordering is what makes direct
-    imports safe, the queries.py ordering is what the driver grades."""
-    init_list = _parsed_import_list(os.path.join(PKG_DIR, "__init__.py"))
-    assert MODULES == init_list, (
-        "queries.py and queries_pkg/__init__.py import lists differ "
-        "(same modules, same order required)"
-    )
+def _source(name: str) -> str:
+    return open(os.path.join(PKG_DIR, f"{name}.py")).read()
+
+
+def _registers(name: str) -> bool:
+    """Whether the module decorates anything with ``@query(...)``."""
+    for node in ast.walk(ast.parse(_source(name))):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for d in node.decorator_list:
+                f = d.func if isinstance(d, ast.Call) else d
+                if isinstance(f, ast.Name) and f.id == "query":
+                    return True
+    return False
+
+
+def _package_imports(source: str) -> list[str]:
+    """Every ffi_etl_spark.queries* module the source imports from, at
+    any depth (function-local imports count too)."""
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, ast.ImportFrom) and node.module:
+            if node.module == PKG:
+                found += [
+                    f"{PKG}.{a.name}" for a in node.names
+                    if os.path.exists(os.path.join(PKG_DIR, f"{a.name}.py"))
+                ] or [PKG]
+            elif node.module.startswith("ffi_etl_spark.queries"):
+                found.append(node.module)
+        elif isinstance(node, ast.Import):
+            found += [a.name for a in node.names if a.name.startswith("ffi_etl_spark.queries")]
+    return found
 
 
 def test_module_list_is_complete():
-    """Every .py file in queries_pkg/ must appear in the registry import
-    list — a new registration module that is never imported would
-    silently drop its queries from the graded registry."""
+    """Every module that registers a query is listed in queries.py (an
+    unlisted one would drop its queries from the graded registry), every
+    listed module exists and registers, and oracle_sql registers none."""
     files = sorted(
-        f[:-3]
-        for f in os.listdir(PKG_DIR)
-        if f.endswith(".py") and f != "__init__.py"
+        f[:-3] for f in os.listdir(PKG_DIR) if f.endswith(".py") and f != "__init__.py"
     )
-    assert sorted(MODULES) == files, (
-        "queries_pkg/ files and the queries.py import list diverged: "
-        f"only-on-disk={sorted(set(files) - set(MODULES))}, "
-        f"only-in-list={sorted(set(MODULES) - set(files))}"
+    registering = sorted(f for f in files if _registers(f))
+    assert sorted(MODULES) == registering, (
+        "registration modules and the queries.py MODULES list diverged: "
+        f"unlisted={sorted(set(registering) - set(MODULES))}, "
+        f"listed-but-not-registering={sorted(set(MODULES) - set(registering))}"
     )
+    assert len(MODULES) == len(set(MODULES))
+    assert not _registers(HELPERS)
+    assert sorted(set(files) - set(MODULES)) == [HELPERS]
+
+
+def test_registration_modules_import_no_sibling():
+    """A registration module imports only the leaf (``query``) and
+    oracle_sql from the registry; oracle_sql and the leaf import none of
+    it — so no import order can find a module half-initialized."""
+    allowed = {PKG, f"{PKG}.{HELPERS}"}
+    for m in MODULES:
+        bad = sorted(set(_package_imports(_source(m))) - allowed)
+        assert not bad, f"{m} imports from {bad}; move shared SQL to {HELPERS}.py"
+    assert _package_imports(_source(HELPERS)) == []
+    assert _package_imports(open(os.path.join(PKG_DIR, "__init__.py")).read()) == []
+
+
+def _registry_after(first: str | None) -> dict:
+    """The registry's names and oracles in a fresh interpreter that
+    imports ``first`` (a queries_pkg module) before ffi_etl_spark.queries."""
+    pre = f"import {PKG}.{first}; " if first else ""
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            pre + "import json, ffi_etl_spark.queries as q; "
+            "print(json.dumps({'names': list(q.QUERIES), 'oracles': q.ORACLES}))",
+        ],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, f"import of {first} failed:\n{proc.stderr[-2000:]}"
+    return json.loads(proc.stdout.splitlines()[-1])
 
 
 def test_every_queries_pkg_module_imports_directly():
-    for m in MODULES:
-        proc = subprocess.run(
-            [
-                sys.executable,
-                "-c",
-                f"import ffi_etl_spark.queries_pkg.{m}; "
-                "import ffi_etl_spark.queries as q; "
-                "assert len(q.QUERIES) >= 264",
-            ],
-            cwd=REPO,
-            capture_output=True,
-            text=True,
-            timeout=120,
+    """Importing any queries_pkg module first gives the canonical
+    registry: the same names in the same order, the same oracles."""
+    canonical = _registry_after(None)
+    assert len(canonical["names"]) >= 264
+    for m in MODULES + [HELPERS]:
+        got = _registry_after(m)
+        assert got["names"] == canonical["names"], (
+            f"registry order differs after importing {m} first"
         )
-        assert proc.returncode == 0, f"direct import of {m} failed:\n{proc.stderr[-2000:]}"
+        assert list(got["oracles"].items()) == list(canonical["oracles"].items()), (
+            f"oracles differ after importing {m} first"
+        )

@@ -60,9 +60,9 @@ def test_ivf_autok_cells_pinned_and_scaling():
     import math
 
     from ffi_etl_spark.operators.similarity import choose_ivf_cells
-    from ffi_etl_spark.queries_pkg.round7 import _AUTOK_CELLS, _AUTOK_SLICE
+    from ffi_etl_spark.queries_pkg.oracle_sql import AUTOK_CELLS, AUTOK_SLICE
 
-    assert choose_ivf_cells(_AUTOK_SLICE) == _AUTOK_CELLS
+    assert choose_ivf_cells(AUTOK_SLICE) == AUTOK_CELLS
     for n in (0, 1, 4, 500, 20_000, 60_000):
         assert choose_ivf_cells(n) == max(2, math.isqrt(max(n, 0)))
     # monotone non-decreasing in n — a bigger corpus never gets fewer cells

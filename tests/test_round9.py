@@ -719,9 +719,9 @@ def test_ivf_append_parity_idempotence_and_drift(spark, sf_dir, tmp_path):
         ivf_quantizer_drift,
         ivf_train_quantizer,
     )
-    from ffi_etl_spark.queries_pkg.round7 import _APPEND_BUILD, _APPEND_CELLS
+    from ffi_etl_spark.queries_pkg.oracle_sql import APPEND_BUILD, APPEND_CELLS
 
-    assert choose_ivf_cells(_APPEND_BUILD) == _APPEND_CELLS  # oracle pin
+    assert choose_ivf_cells(APPEND_BUILD) == APPEND_CELLS  # oracle pin
 
     emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
     base = emb.filter(F.col("vec_id") < 200)

@@ -89,7 +89,7 @@ def _np_kmeans_quantized(vecs: np.ndarray, k: int, n_iter: int, bits: int) -> np
 def test_kmeans_quantized_matches_numpy(spark, clustered_v25):
     """The oracle-gradeable integer-centroid mode, differentially
     checked round by round against a numpy replica — the same contract
-    the unrolled DuckDB CTE oracle (_kmeans_det_cte) encodes."""
+    the unrolled DuckDB CTE oracle (oracle_sql.kmeans_det_cte) encodes."""
     df = spark.createDataFrame(clustered_v25, "vec_id long, embedding array<double>")
     got = {
         r["vec_id"]: r["centroid_id"]

@@ -120,16 +120,15 @@ def test_rollup_all_mixed_dtypes_take_per_frame_fallback(spark):
     demographic list rolls up column by column, keeping each column's
     own comparison with 'Unknown'. For the bigint column that comparison
     is null (non-ANSI cast of 'Unknown'), so its totals are blank and
-    its denominator is null; the fused explode would coerce the
-    categories to string and fill both in."""
+    its denominator and percent are null; the fused explode would
+    coerce the categories to string and fill them in."""
     df = spark.createDataFrame(
         [Row(seg="A", n=1), Row(seg="Unknown", n=2), Row(seg="B", n=1)]
     )
     out = rollup_all(df, [("seg", "Seg"), ("n", "N")])  # string + bigint
-    # a null argument formats through %.2f as "null" cut to 2 chars
     assert sorted(map(tuple, out.collect())) == [
-        ("N", "1", 2, "nu%", ""),
-        ("N", "2", 1, "nu%", ""),
+        ("N", "1", 2, None, ""),
+        ("N", "2", 1, None, ""),
         ("Seg", "A", 1, "50.00%", "2"),
         ("Seg", "B", 1, "50.00%", "2"),
         ("Seg", "Unknown", 1, "50.00%", ""),
