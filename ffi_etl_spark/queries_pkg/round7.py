@@ -289,7 +289,6 @@ def _ann_ivf_stored(spark, sf_dir):
 # pure function of (vector, model), so the oracle assigns the full
 # slice against the replayed APPEND_BUILD-trained model in one pass —
 # exactly what stored ∪ appended equals.
-_DRIFT_FLOOR_Q = 524288  # FLOOR(0.5 * 2^20): the quantized sim floor
 
 
 def _ivf_append_oracle() -> str:
@@ -428,6 +427,9 @@ def _ann_ivf_churn(spark, sf_dir):
     # compaction must execute (not no-op) for this gate to mean anything
     compact_ivf_assignments(spark, apath, files_per_cell=1)
     return ann_ivf_query_stored(stored_model, spark.read.parquet(apath), queries)
+
+
+_DRIFT_FLOOR_Q = 524288  # FLOOR(0.5 * 2^20): the quantized sim floor
 
 
 def _ivf_drift_oracle() -> str:
